@@ -38,10 +38,5 @@ def minhash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     return [(rng.randrange(1, MERSENNE_P), rng.randrange(0, MERSENNE_P)) for _ in range(k)]
 
 
-def minhash_expr(x: Column, a: int, b: int) -> Column:
-    """(a·(x mod p) + b) mod p — exact in int64 (Spark side)."""
-    return ((x % MERSENNE_P) * F.lit(a) + F.lit(b)) % MERSENNE_P
-
-
 def minhash_expr_sql(x_expr: str, a: int, b: int) -> str:
     return f"((({x_expr}) % {MERSENNE_P}) * {a} + {b}) % {MERSENNE_P}"

@@ -1,12 +1,16 @@
 """Driver-facing queries that run the REAL Structured Streaming engine
-end-to-end (readStream → watermark → windowed agg → availableNow →
-memory sink) and return the final table — so even the streaming layer
-is DuckDB-oracle-checked, not just rows-counted.
+end-to-end (file stream → stateful operator → availableNow → memory
+sink) and return the final table — so even the streaming layer is
+DuckDB-oracle-checked, not just rows-counted.
 
-Each query stages the events table to a temp directory through the S4
-parquet sink, attaches a multi-batch file stream (maxFilesPerTrigger
-keeps several micro-batches in play — incremental state is genuinely
-exercised), runs to completion, and returns the sink table.
+Every query replays one source table (`events`, `documents` or
+`embeddings`) through the single harness `_run`: the table is staged
+to a temp directory through the S4 parquet sink, a multi-batch file
+stream is attached (several micro-batches per replay, so incremental
+state is genuinely exercised), the query's stream transform drains to
+the memory sink, and the staging and checkpoint directories are
+deleted. A query is therefore only its stream transform plus the batch
+tail it shares with its batch twin.
 """
 
 from __future__ import annotations
@@ -28,8 +32,9 @@ from capstone_etl_spark.operators.events import (
     SLIDING_WINDOWS_SQL,
     TUMBLING_WINDOWS_SQL,
 )
+from capstone_etl_spark.session import cached, checkpoint_truncate
+from capstone_etl_spark.sources.tables import load_table
 from capstone_etl_spark.streaming import (
-    events_stream,
     run_to_memory,
     stage_events,
     stream_click_purchase_join,
@@ -57,8 +62,6 @@ def _stream_static(df: DataFrame) -> DataFrame:
     stream_training_manifest: 1211 -> 808 tasks and -6 MB shuffle write
     after switching to truncation, output hash identical). The blocks
     are tracked and freed by release_caches() like every cache."""
-    from capstone_etl_spark.session import checkpoint_truncate
-
     return checkpoint_truncate(df)
 
 
@@ -69,7 +72,8 @@ def _horizon_watermark(staged: DataFrame) -> str:
     (a fixed constant silently under-covers a longer corpus and drops
     rows; ADVICE r3). One min/max over the ts column of the staging
     copy we just wrote — parquet column stats make this metadata-cheap
-    at any scale. See streaming/windows.py watermark note."""
+    at any scale. Only event-time transforms call it (one job each).
+    See streaming/windows.py watermark note."""
     lo, hi = staged.agg(
         F.min(F.col("ts").cast("long")), F.max(F.col("ts").cast("long"))
     ).first()
@@ -77,14 +81,44 @@ def _horizon_watermark(staged: DataFrame) -> str:
     return f"{days} days"
 
 
-def _run(spark: SparkSession, sf_dir: str, transform, output_mode: str) -> DataFrame:
+def _ts_midpoint(staged: DataFrame) -> float:
+    """Deploy-time pre/post split (stream_cuped, stream_psi_drift): the
+    midpoint of the staged copy's ts span in microseconds — the same
+    expression the batch plans evaluate in-plan over the same rows."""
+    return staged.agg(
+        ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("m")
+    ).first()[0]
+
+
+def _run(
+    spark: SparkSession,
+    sf_dir: str,
+    transform,
+    output_mode: str,
+    table: str = "events",
+    **run_kw,
+) -> DataFrame:
+    """The replay harness: stage `table` as 4 parquet files, attach a
+    file stream that takes 2 files per trigger (so every replay spans
+    several micro-batches), drain `transform(stream, staged)` to the
+    memory sink and return the sink table. `staged` is the batch frame
+    over the staged copy, for deploy-time literals (watermark horizon,
+    value grids) — read it inside `transform`; the directory is gone
+    once `_run` returns. Extra keywords pass through to run_to_memory."""
     work = tempfile.mkdtemp(prefix="spark_stream_")
     try:
-        staged = stage_events(spark, sf_dir, f"{work}/staging", n_files=4)
-        watermark = _horizon_watermark(staged)
-        stream = events_stream(spark, f"{work}/staging", max_files_per_trigger=2)
+        staging = f"{work}/staging"
+        staged = stage_events(spark, sf_dir, staging, n_files=4, table=table)
+        stream = (
+            spark.readStream.schema(staged.schema)
+            .option("maxFilesPerTrigger", 2)
+            .parquet(staging)
+        )
         return run_to_memory(
-            transform(stream, watermark), f"{work}/checkpoint", output_mode=output_mode
+            transform(stream, staged),
+            f"{work}/checkpoint",
+            output_mode=output_mode,
+            **run_kw,
         )
     finally:
         # The memory sink holds results in the driver; staged files and
@@ -92,37 +126,32 @@ def _run(spark: SparkSession, sf_dir: str, transform, output_mode: str) -> DataF
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _event_time(stream_op):
+    """Transform for the event-time operators in streaming/windows.py:
+    the watermark horizon is measured on the staged copy."""
+    return lambda s, staged: stream_op(s, watermark=_horizon_watermark(staged))
+
+
 def stream_tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling windows, oracle-identical to the batch form."""
-    return _run(
-        spark, sf_dir, lambda s, wm: stream_tumbling(s, watermark=wm), "complete"
-    )
+    return _run(spark, sf_dir, _event_time(stream_tumbling), "complete")
 
 
 def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sliding windows (10 min / slide 5): every event enters
     two overlapping state-store windows — overlapping-window state is
     the piece tumbling doesn't exercise."""
-    return _run(
-        spark, sf_dir, lambda s, wm: stream_sliding(s, watermark=wm), "complete"
-    )
+    return _run(spark, sf_dir, _event_time(stream_sliding), "complete")
 
 
 def stream_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicatesWithinWatermark → per-type counts."""
-    return _run(
-        spark, sf_dir, lambda s, wm: stream_dedup_counts(s, watermark=wm), "complete"
-    )
+    return _run(spark, sf_dir, _event_time(stream_dedup_counts), "complete")
 
 
 def stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (F.session_window) on the stream."""
-    return _run(
-        spark,
-        sf_dir,
-        lambda s, wm: stream_session_windows(s, watermark=wm),
-        "complete",
-    )
+    return _run(spark, sf_dir, _event_time(stream_session_windows), "complete")
 
 
 # Session-window semantics (pinned against Spark at sf0.1, where an
@@ -163,7 +192,7 @@ def stream_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     highest running count (strictly increasing per touch) — extracted
     with a lexicographic struct-max, no ordering assumptions on the
     value column."""
-    got = _run(spark, sf_dir, lambda s, wm: running_user_activity(s), "update")
+    got = _run(spark, sf_dir, lambda s, _: running_user_activity(s), "update")
     final = F.max(F.struct("n_events", "total_value", "last_seen_sec")).alias("s")
     return (
         got.groupBy("user_id")
@@ -190,12 +219,7 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted territory; the join itself is the streaming operator
     under test. Inner join ⇒ only purchases with ≥1 prior click
     appear (documented, mirrored by the oracle)."""
-    got = _run(
-        spark,
-        sf_dir,
-        lambda s, wm: stream_click_purchase_join(s, watermark=wm),
-        "append",
-    )
+    got = _run(spark, sf_dir, _event_time(stream_click_purchase_join), "append")
     return (
         got.groupBy("purchase_id", "user_id", "purchase_sec")
         .agg(
@@ -228,8 +252,6 @@ def _user_tiers(spark: SparkSession, sf_dir: str):
     """Batch-computed static dimension: per-user lifetime purchase
     value bucketed into fixed tiers (fixed thresholds, DECIMAL-exact
     sums — deterministic on both engines)."""
-    from capstone_etl_spark.sources.tables import load_table
-
     ev = load_table(spark, sf_dir, "events")
     total = (
         ev.filter(F.col("event_type") == "purchase")
@@ -252,12 +274,7 @@ def stream_tier_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     third streaming join class after windowed aggs and stream-stream —
     dimension enrichment at ingest."""
     tiers = _user_tiers(spark, sf_dir)
-    return _run(
-        spark,
-        sf_dir,
-        lambda s, wm: stream_enrich_user_tier(s, tiers),
-        "complete",
-    )
+    return _run(spark, sf_dir, lambda s, _: stream_enrich_user_tier(s, tiers), "complete")
 
 
 STREAM_TIER_ROLLUP_SQL = f"""
@@ -288,28 +305,12 @@ def stream_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch. Same oracle as the batch funnel — the streaming engine must
     reproduce it exactly. This is the ingest-gate deployment shape: new
     corpus shards stream in, the funnel audit updates per micro-batch."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.quality import _rule_flags, funnel_agg, funnel_unpack
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_docs_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        one = run_to_memory(
-            funnel_agg(_rule_flags(stream)), f"{work}/checkpoint", output_mode="complete"
-        )
-        return funnel_unpack(one)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    one = _run(
+        spark, sf_dir, lambda s, _: funnel_agg(_rule_flags(s)), "complete", table="documents"
+    )
+    return funnel_unpack(one)
 
 
 def _stream_quality_funnel_sql() -> str:
@@ -331,42 +332,27 @@ def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Update-mode emissions carry a per-key update counter; the final row
     per source is selected by struct-max on it (stream_user_activity's
     device)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.sketches import NGRAM_N
-    from capstone_etl_spark.sources.tables import load_table
     from capstone_etl_spark.streaming.stateful import kmv_bottom_k
 
-    work = tempfile.mkdtemp(prefix="spark_stream_kmv_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         toks = stream.select("source", tokenize("text").alias("toks"))
         hashes = toks.select(
             "source",
             F.explode(token_ngrams("toks", NGRAM_N)).alias("g"),
         ).select("source", md5_hash60(F.col("g")).alias("h"))
-        got = run_to_memory(
-            kmv_bottom_k(hashes), f"{work}/checkpoint", output_mode="update"
-        )
-        final = F.max(F.struct("upd", "kp", "hk", "kmv_estimate")).alias("s")
-        return (
-            got.groupBy("source")
-            .agg(final)
-            .select("source", F.col("s.kp").alias("kp"), F.col("s.hk").alias("hk"),
-                    F.round(F.col("s.kmv_estimate"), 6).alias("kmv_estimate"))
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return kmv_bottom_k(hashes)
+
+    got = _run(spark, sf_dir, transform, "update", table="documents")
+    final = F.max(F.struct("upd", "kp", "hk", "kmv_estimate")).alias("s")
+    return (
+        got.groupBy("source")
+        .agg(final)
+        .select("source", F.col("s.kp").alias("kp"), F.col("s.hk").alias("hk"),
+                F.round(F.col("s.kmv_estimate"), 6).alias("kmv_estimate"))
+    )
 
 
 def _stream_kmv_sketch_sql() -> str:
@@ -411,24 +397,11 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     under reruns' becomes 'the sample is independent of
     micro-batching'. Final snapshot per source selected by the
     update-counter max (stream_user_activity's device)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.operators.sampling import RESERVOIR_SALT
-    from capstone_etl_spark.sources.tables import load_table
     from capstone_etl_spark.streaming.stateful import reservoir_bottom_k
 
-    work = tempfile.mkdtemp(prefix="spark_stream_reservoir_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         rows = stream.select(
             "source",
             "doc_id",
@@ -437,19 +410,17 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat(F.lit(RESERVOIR_SALT), F.col("doc_id").cast("string"))
             ).alias("h"),
         )
-        got = run_to_memory(
-            reservoir_bottom_k(rows), f"{work}/checkpoint", output_mode="update"
+        return reservoir_bottom_k(rows)
+
+    got = _run(spark, sf_dir, transform, "update", table="documents")
+    mx = got.groupBy(F.col("source").alias("msrc")).agg(F.max("upd").alias("mupd"))
+    return (
+        got.join(
+            F.broadcast(mx),
+            (got["source"] == F.col("msrc")) & (got["upd"] == F.col("mupd")),
         )
-        mx = got.groupBy(F.col("source").alias("msrc")).agg(F.max("upd").alias("mupd"))
-        return (
-            got.join(
-                F.broadcast(mx),
-                (got["source"] == F.col("msrc")) & (got["upd"] == F.col("mupd")),
-            )
-            .select("source", "doc_id", "lang", "rnk")
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .select("source", "doc_id", "lang", "rnk")
+    )
 
 
 def _stream_reservoir_sample_sql() -> str:
@@ -471,42 +442,29 @@ def stream_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     source_mixing_weights (same √ snap to DECIMAL(28,10), same one
     double division), and the oracle is the batch SQL minus the
     dup-rate column — the streaming engine must reproduce it exactly."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_mix_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        ws = F.size(tokenize("text")).cast("long")
-        agg = stream.groupBy("source").agg(
+    ws = F.size(tokenize("text")).cast("long")
+    snap = _run(
+        spark,
+        sf_dir,
+        lambda s, _: s.groupBy("source").agg(
             F.count("*").alias("n_docs"),
             F.sum(ws).alias("n_tokens"),
             F.sum(F.length("text").cast("long")).alias("n_chars_sum"),
-        )
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        sq = F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(28,10)")
-        w_all = Window.partitionBy()
-        return snap.select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            (F.col("n_chars_sum").cast("double") / F.col("n_docs")).alias("mean_chars"),
-            (sq.cast("double") / F.sum(sq).over(w_all).cast("double")).alias("mix_weight"),
-        ).orderBy("source")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        "complete",
+        table="documents",
+    )
+    sq = F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(28,10)")
+    w_all = Window.partitionBy()
+    return snap.select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        (F.col("n_chars_sum").cast("double") / F.col("n_docs")).alias("mean_chars"),
+        (sq.cast("double") / F.sum(sq).over(w_all).cast("double")).alias("mix_weight"),
+    ).orderBy("source")
 
 
 STREAM_MIXING_WEIGHTS_SQL = """
@@ -536,41 +494,28 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sketch EXACTLY and shares its oracle arithmetic. Complete-
     mode aggregation on (d, bucket): |state| = CM_D·CM_W keys no
     matter how many shards stream in."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.sketches import CM_D, CM_W
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_cm_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    buckets = F.array(
+        *[
+            F.struct(
+                F.lit(d).alias("d"),
+                (md5_hash60(F.concat(F.lit(f"cm{d}:"), F.col("token"))) % CM_W).alias(
+                    "bucket"
+                ),
+            )
+            for d in range(CM_D)
+        ]
+    )
+
+    def transform(stream, _):
         tok = stream.select(F.explode(tokenize("text")).alias("token"))
-        buckets = F.array(
-            *[
-                F.struct(
-                    F.lit(d).alias("d"),
-                    (md5_hash60(F.concat(F.lit(f"cm{d}:"), F.col("token"))) % CM_W).alias(
-                        "bucket"
-                    ),
-                )
-                for d in range(CM_D)
-            ]
-        )
         cells = tok.select(F.explode(buckets).alias("b")).select("b.d", "b.bucket")
-        agg = cells.groupBy("d", "bucket").agg(F.count("*").cast("long").alias("c"))
-        return run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return cells.groupBy("d", "bucket").agg(F.count("*").cast("long").alias("c"))
+
+    return _run(spark, sf_dir, transform, "complete", table="documents")
 
 
 def _stream_count_min_sql() -> str:
@@ -611,11 +556,6 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train doc's groups = its matched allowed-shingle count. One
     streaming aggregation, state bounded by cross-cut candidate pairs
     (+ one NULL-bench row per train doc)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.dedup import (
@@ -625,34 +565,22 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         NGRAM_N,
         shingles,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_decon_")
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        sh = shingles(docs)
-        bench = sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
-            "sh", F.col("doc_id").alias("bench_doc")
-        )
-        sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
-        pw = Window.partitionBy("sh").orderBy("bench_doc")
-        posts = bench.withColumn("pos", F.row_number().over(pw))
-        static = _stream_static(
-            sh.select("sh")
-            .distinct()
-            .join(posts, "sh", "left")
-            .select("sh", "bench_doc", F.coalesce("pos", F.lit(1)).alias("pos"))
-        )
+    sh = shingles(load_table(spark, sf_dir, "documents"))
+    bench = sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
+        "sh", F.col("doc_id").alias("bench_doc")
+    )
+    sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
+    pw = Window.partitionBy("sh").orderBy("bench_doc")
+    posts = bench.withColumn("pos", F.row_number().over(pw))
+    static = _stream_static(
+        sh.select("sh")
+        .distinct()
+        .join(posts, "sh", "left")
+        .select("sh", "bench_doc", F.coalesce("pos", F.lit(1)).alias("pos"))
+    )
 
-        staging = f"{work}/staging"
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         toks = stream.filter(F.col("doc_id") % BENCH_MOD != 0).select(
             F.col("doc_id").alias("train_doc"), tokenize("text").alias("toks")
         )
@@ -664,7 +592,7 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("sh"),
         )
-        agg = (
+        return (
             stream_sh.join(static, "sh")
             .groupBy("train_doc", "bench_doc")
             .agg(
@@ -672,28 +600,27 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum((F.col("pos") == 1).cast("long")).alias("n_first"),
             )
         )
-        got = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        # sz_c via a per-train window over the drained pair table (its
-        # input is bounded by a doc's candidate-pair count) — a sink
-        # self-join would carry conflicting references
-        with_sz = got.withColumn(
-            "sz_c", F.sum("n_first").over(Window.partitionBy("train_doc"))
+
+    got = _run(spark, sf_dir, transform, "complete", table="documents")
+    # sz_c via a per-train window over the drained pair table (its
+    # input is bounded by a doc's candidate-pair count) — a sink
+    # self-join would carry conflicting references
+    with_sz = got.withColumn(
+        "sz_c", F.sum("n_first").over(Window.partitionBy("train_doc"))
+    )
+    jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
+    cont = F.col("n_inter") / F.col("sz_b")
+    return (
+        with_sz.filter(F.col("bench_doc").isNotNull())
+        .join(sz_b, "bench_doc")
+        .filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD))
+        .select(
+            "train_doc",
+            "bench_doc",
+            F.round(jac, 6).alias("jaccard"),
+            F.round(cont, 6).alias("containment"),
         )
-        jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
-        cont = F.col("n_inter") / F.col("sz_b")
-        return (
-            with_sz.filter(F.col("bench_doc").isNotNull())
-            .join(sz_b, "bench_doc")
-            .filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD))
-            .select(
-                "train_doc",
-                "bench_doc",
-                F.round(jac, 6).alias("jaccard"),
-                F.round(cont, 6).alias("containment"),
-            )
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_decontamination_sql() -> str:
@@ -711,9 +638,6 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shared oracle). Complete-mode agg, no event time → no watermark;
     this is the scrub-audit a 100 TB ingest runs while shards land,
     before anything downstream touches the text."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.privacy import (
         PII_EMAIL,
         PII_ID,
@@ -721,18 +645,8 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         PII_PHONE,
         _count,
     )
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_pii_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         t = F.col("text")
         per_doc = stream.select(
             "source",
@@ -741,7 +655,7 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             _count(t, PII_PHONE).alias("p"),
             _count(t, PII_ID).alias("d"),
         )
-        agg = per_doc.groupBy("source").agg(
+        return per_doc.groupBy("source").agg(
             F.count("*").cast("long").alias("n_docs"),
             F.sum(
                 ((F.col("e") + F.col("i") + F.col("p") + F.col("d")) > 0).cast("long")
@@ -751,9 +665,8 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("p").cast("long").alias("phones"),
             F.sum("d").cast("long").alias("idnums"),
         )
-        return run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _run(spark, sf_dir, transform, "complete", table="documents")
 
 
 def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,26 +679,13 @@ def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by |sources|) and collapses to n_sources in the final
     batch projection — the drained result must equal the batch miner
     row-for-row (same oracle)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.dedup import (
         TEMPLATE_MIN_DOCS,
         template_shape,
     )
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_docs_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        agg = (
+    def transform(stream, _):
+        return (
             stream.select(
                 "doc_id", "source", template_shape("text").alias("template_shape")
             )
@@ -796,19 +696,18 @@ def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("doc_id").alias("example_doc_id"),
             )
         )
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return (
-            snap.filter(F.col("n_docs") >= TEMPLATE_MIN_DOCS)
-            .select(
-                F.md5("template_shape").alias("template_hash"),
-                "n_docs",
-                F.size("srcs").cast("long").alias("n_sources"),
-                "example_doc_id",
-                "template_shape",
-            )
+
+    snap = _run(spark, sf_dir, transform, "complete", table="documents")
+    return (
+        snap.filter(F.col("n_docs") >= TEMPLATE_MIN_DOCS)
+        .select(
+            F.md5("template_shape").alias("template_hash"),
+            "n_docs",
+            F.size("srcs").cast("long").alias("n_sources"),
+            "example_doc_id",
+            "template_shape",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_template_extraction_sql() -> str:
@@ -836,9 +735,6 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch n_inter; both partner sizes come from the static size table
     at verdict time. State is bounded by cross-delta candidate pairs
     (df-capped), never |base|²."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.dedup import (
@@ -847,24 +743,13 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _is_delta,
         shingles,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_docs_")
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        sh = _stream_static(shingles(docs))
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-        index = sh.select("sh", F.col("doc_id").alias("doc_b"))
+    docs = load_table(spark, sf_dir, "documents")
+    sh = _stream_static(shingles(docs))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    index = sh.select("sh", F.col("doc_id").alias("doc_b"))
 
-        staging = f"{work}/staging"
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         arriving = stream.filter(_is_delta(F.col("doc_id"))).select(
             F.col("doc_id").alias("doc_a"), tokenize("text").alias("toks")
         )
@@ -877,41 +762,40 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sh"),
         )
         partner_ok = (~_is_delta(F.col("doc_b"))) | (F.col("doc_b") < F.col("doc_a"))
-        agg = (
+        return (
             stream_sh.join(index, "sh")
             .filter((F.col("doc_b") != F.col("doc_a")) & partner_ok)
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").alias("n_inter"))
         )
-        pairs_raw = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
 
-        # batch verdict assembly over the drained pair table
-        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-        jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-        pairs = (
-            pairs_raw.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .filter(jac >= JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    pairs_raw = _run(spark, sf_dir, transform, "complete", table="documents")
+
+    # batch verdict assembly over the drained pair table
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
+    pairs = (
+        pairs_raw.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jac >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+    best = pairs.groupBy("doc_a").agg(
+        F.min(F.struct("doc_b", "jaccard")).alias("m"),
+        F.count("*").cast("long").alias("n_dups"),
+    )
+    delta_docs = docs.select("doc_id").filter(_is_delta(F.col("doc_id")))
+    return (
+        delta_docs.join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
+        .select(
+            "doc_id",
+            F.col("m").isNotNull().alias("is_dup"),
+            F.coalesce(F.col("m.doc_b"), F.col("doc_id")).alias("dup_of"),
+            F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
+            F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
         )
-        best = pairs.groupBy("doc_a").agg(
-            F.min(F.struct("doc_b", "jaccard")).alias("m"),
-            F.count("*").cast("long").alias("n_dups"),
-        )
-        delta_docs = docs.select("doc_id").filter(_is_delta(F.col("doc_id")))
-        return (
-            delta_docs.join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("m").isNotNull().alias("is_dup"),
-                F.coalesce(F.col("m.doc_b"), F.col("doc_id")).alias("dup_of"),
-                F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
-                F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
-            )
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_dedup_incremental_sql() -> str:
@@ -940,11 +824,6 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the TOP_K ranking runs on the drained candidate table (bounded by
     queries × probed cells' population). Oracle: the batch
     ANN_IVF_TOPK_SQL verbatim."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         IVF_PROBES_MIN,
@@ -953,45 +832,34 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_fp,
         quantizer_seeds,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        seeds = quantizer_seeds(emb_q)
-        d2_col = F.aggregate(
-            F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    seeds = quantizer_seeds(emb_q)
+    d2_col = F.aggregate(
+        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    assign = _stream_static(
+        emb_q.join(F.broadcast(seeds), F.lit(True))
+        .select("vec_id", "cell", d2_col.alias("d2"))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "cell")).alias("m"))
+        .select(F.col("vec_id").alias("neighbor_id"), F.col("m.cell").alias("cell"))
+    )
+    neigh = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
+    )
+    seed_row = _stream_static(
+        seeds.agg(
+            F.collect_list(F.struct("cell", "sq")).alias("seeds"),
+            F.count("*").alias("n_cells"),
         )
-        assign = _stream_static(
-            emb_q.join(F.broadcast(seeds), F.lit(True))
-            .select("vec_id", "cell", d2_col.alias("d2"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("d2", "cell")).alias("m"))
-            .select(F.col("vec_id").alias("neighbor_id"), F.col("m.cell").alias("cell"))
-        )
-        neigh = emb.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-        )
-        seed_row = _stream_static(
-            seeds.agg(
-                F.collect_list(F.struct("cell", "sq")).alias("seeds"),
-                F.count("*").alias("n_cells"),
-            )
-        )
+    )
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("qe"),
@@ -1027,7 +895,7 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("query_id", "qe", F.col("p.cell").alias("cell"))
         )
-        scored = (
+        return (
             probes.join(assign, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .join(neigh, "neighbor_id")
@@ -1037,15 +905,14 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(qcosine("qe", "ne"), 6).alias("sim"),
             )
         )
-        got = run_to_memory(scored, f"{work}/checkpoint", output_mode="append")
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        return (
-            got.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", "neighbor_id", "sim", "rnk")
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    got = _run(spark, sf_dir, transform, "append", table="embeddings")
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        got.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("query_id", "neighbor_id", "sim", "rnk")
+    )
 
 
 def _stream_ann_topk_sql() -> str:
@@ -1069,9 +936,6 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed folds to ≈N^(1/4) + B·N^(1/4) — the same asymptotic win the
     batch index measured (SCALE.md). Oracle: ANN_HIVF_TOPK_SQL
     verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         IVF_PROBES_MIN,
@@ -1084,36 +948,25 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_fp,
         quantizer_seeds,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_hivf_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        assign = _stream_static(
-            hier_assign(emb_q).select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    assign = _stream_static(
+        hier_assign(emb_q).select(
+            F.col("vec_id").alias("neighbor_id"), "cell"
         )
-        neigh = emb.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-        )
-        # branch → second-level seed list, one nested 1-row broadcast
-        n_cells_row = quantizer_seeds(emb_q).agg(F.count("*").alias("n_cells"))
-        brow = _stream_static(
-            hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
-        )
+    )
+    neigh = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
+    )
+    # branch → second-level seed list, one nested 1-row broadcast
+    n_cells_row = quantizer_seeds(emb_q).agg(F.count("*").alias("n_cells"))
+    brow = _stream_static(
+        hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
+    )
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("qe"),
@@ -1148,7 +1001,7 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("query_id", "qe", F.col("p.cell").alias("cell"))
         )
-        scored = (
+        return (
             probes.join(assign, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .join(neigh, "neighbor_id")
@@ -1158,15 +1011,14 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(qcosine("qe", "ne"), 6).alias("sim"),
             )
         )
-        got = run_to_memory(scored, f"{work}/checkpoint", output_mode="append")
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        return (
-            got.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", "neighbor_id", "sim", "rnk")
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    got = _run(spark, sf_dir, transform, "append", table="embeddings")
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        got.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("query_id", "neighbor_id", "sim", "rnk")
+    )
 
 
 def _stream_ann_hivf_topk_sql() -> str:
@@ -1195,9 +1047,6 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured (decade-2 exponent 0.95 vs the flat 1.24, SCALE.md); the
     sink holds candidate×M bounded rows, and re-delivery cannot
     corrupt anything because nothing aggregates in-stream."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.similarity import (
         CENTROID_SCALE,
         IVF_PROBES_MIN,
@@ -1213,47 +1062,36 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_fp,
         quantizer_seeds,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_hivfpq_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        seeds = quantizer_seeds(emb_q)
-        assign = _stream_static(
-            hier_assign(emb_q).select(F.col("vec_id").alias("neighbor_id"), "cell")
-        )
-        # static code relation joined to its codeword subvectors ONCE:
-        # (neighbor_id, m, ssub) is the compressed corpus the serving
-        # tier actually stores
-        seed_sub = seeds.select(
-            F.col("cell").alias("cw"),
-            F.posexplode(
-                F.array(
-                    *[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)]
-                )
-            ).alias("m", "ssub"),
-        )
-        code_sub = _stream_static(
-            _pq_hier_codes(emb_q)
-            .select(F.col("vec_id").alias("neighbor_id"), "m", F.col("cell").alias("cw"))
-            .join(seed_sub, ["m", "cw"])
-        )
-        n_cells_row = seeds.agg(F.count("*").alias("n_cells"))
-        brow = _stream_static(
-            hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
-        )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    seeds = quantizer_seeds(emb_q)
+    assign = _stream_static(
+        hier_assign(emb_q).select(F.col("vec_id").alias("neighbor_id"), "cell")
+    )
+    # static code relation joined to its codeword subvectors ONCE:
+    # (neighbor_id, m, ssub) is the compressed corpus the serving
+    # tier actually stores
+    seed_sub = seeds.select(
+        F.col("cell").alias("cw"),
+        F.posexplode(
+            F.array(
+                *[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)]
+            )
+        ).alias("m", "ssub"),
+    )
+    code_sub = _stream_static(
+        _pq_hier_codes(emb_q)
+        .select(F.col("vec_id").alias("neighbor_id"), "m", F.col("cell").alias("cw"))
+        .join(seed_sub, ["m", "cw"])
+    )
+    n_cells_row = seeds.agg(F.count("*").alias("n_cells"))
+    brow = _stream_static(
+        hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
+    )
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), quant.alias("vq")
         )
@@ -1287,7 +1125,7 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "vq", F.col("p.cell").alias("cell"))
         )
         qsub = F.slice("vq", F.col("m") * PQ_SUBDIM + 1, PQ_SUBDIM)
-        terms = (
+        return (
             probes.join(assign, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .join(code_sub, "neighbor_id")
@@ -1302,24 +1140,23 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("qd2"),
             )
         )
-        got = run_to_memory(terms, f"{work}/checkpoint", output_mode="append")
-        adc = got.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
-        w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-        return (
-            adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= TOP_K)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)),
-                    6,
-                ).alias("adc_dist"),
-                "rnk",
-            )
+
+    got = _run(spark, sf_dir, transform, "append", table="embeddings")
+    adc = got.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
+    return (
+        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(
+                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)),
+                6,
+            ).alias("adc_dist"),
+            "rnk",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_ann_hivf_pq_topk_sql() -> str:
@@ -1342,10 +1179,6 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual-argmax verdict assembly runs the batch code on it and the
     mined set equals the batch miner row-for-row. Oracle:
     BITEXT_MINING_SQL verbatim."""
-    import shutil
-    import tempfile
-
-    from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         BITEXT_K,
         BITEXT_MARGIN,
@@ -1356,30 +1189,19 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         hier_route_expr,
         quantize_fp,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_bitext_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
-        tgt = assign.filter(F.col("vec_id") % 2 == 1).join(
-            emb.select("vec_id", "embedding"), "vec_id"
-        ).select(
-            F.col("vec_id").alias("tgt_id"), "cell", F.col("embedding").alias("ne")
-        )
-        brow = _stream_static(hier_branch_cells_row(emb_q))
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
+    tgt = assign.filter(F.col("vec_id") % 2 == 1).join(
+        emb.select("vec_id", "embedding"), "vec_id"
+    ).select(
+        F.col("vec_id").alias("tgt_id"), "cell", F.col("embedding").alias("ne")
+    )
+    brow = _stream_static(hier_branch_cells_row(emb_q))
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         arriving = stream.filter(F.col("vec_id") % 2 == 0).select(
             F.col("vec_id").alias("src_id"),
             F.col("embedding").alias("qe"),
@@ -1401,54 +1223,51 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("cand", cand_cells)
             .select("src_id", "qe", best_cell.alias("cell"))
         )
-        spairs = _bitext_capped_pairs(routed, tgt)
-        from capstone_etl_spark.session import checkpoint_truncate
+        return _bitext_capped_pairs(routed, tgt)
 
-        # truncate the sink lineage: the assembly joins the pair table
-        # with its own per-endpoint aggregates (the sink-self-join
-        # conflicting-reference class)
-        pairs = checkpoint_truncate(
-            run_to_memory(spairs, f"{work}/checkpoint", output_mode="append")
-        )
+    # truncate the sink lineage: the assembly joins the pair table
+    # with its own per-endpoint aggregates (the sink-self-join
+    # conflicting-reference class)
+    pairs = checkpoint_truncate(
+        _run(spark, sf_dir, transform, "append", table="embeddings")
+    )
 
-        # batch margin / mutual-argmax verdict assembly on the drained
-        # candidate relation
-        dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
-        wx = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("tgt_id"))
-        wy = Window.partitionBy("tgt_id").orderBy(F.desc("sim"), F.asc("src_id"))
-        avg_x = (
-            pairs.withColumn("rk", F.row_number().over(wx))
-            .filter(F.col("rk") <= BITEXT_K)
-            .groupBy("src_id")
-            .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ax"))
-        )
-        avg_y = (
-            pairs.withColumn("rk", F.row_number().over(wy))
-            .filter(F.col("rk") <= BITEXT_K)
-            .groupBy("tgt_id")
-            .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ay"))
-        )
-        den = F.lit(0.5) * (F.col("ax") + F.col("ay"))
-        scored = (
-            pairs.join(avg_x, "src_id")
-            .join(avg_y, "tgt_id")
-            .withColumn("margin", F.when(den > 0, F.col("sim") / den))
-            .filter(F.col("margin") >= BITEXT_MARGIN)
-        )
-        mx = Window.partitionBy("src_id").orderBy(
-            F.desc("margin"), F.desc("sim"), F.asc("tgt_id")
-        )
-        my = Window.partitionBy("tgt_id").orderBy(
-            F.desc("margin"), F.desc("sim"), F.asc("src_id")
-        )
-        return (
-            scored.withColumn("rx", F.row_number().over(mx))
-            .withColumn("ry", F.row_number().over(my))
-            .filter((F.col("rx") == 1) & (F.col("ry") == 1))
-            .select("src_id", "tgt_id", "sim", F.round("margin", 6).alias("margin"))
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    # batch margin / mutual-argmax verdict assembly on the drained
+    # candidate relation
+    dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
+    wx = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("tgt_id"))
+    wy = Window.partitionBy("tgt_id").orderBy(F.desc("sim"), F.asc("src_id"))
+    avg_x = (
+        pairs.withColumn("rk", F.row_number().over(wx))
+        .filter(F.col("rk") <= BITEXT_K)
+        .groupBy("src_id")
+        .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ax"))
+    )
+    avg_y = (
+        pairs.withColumn("rk", F.row_number().over(wy))
+        .filter(F.col("rk") <= BITEXT_K)
+        .groupBy("tgt_id")
+        .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ay"))
+    )
+    den = F.lit(0.5) * (F.col("ax") + F.col("ay"))
+    scored = (
+        pairs.join(avg_x, "src_id")
+        .join(avg_y, "tgt_id")
+        .withColumn("margin", F.when(den > 0, F.col("sim") / den))
+        .filter(F.col("margin") >= BITEXT_MARGIN)
+    )
+    mx = Window.partitionBy("src_id").orderBy(
+        F.desc("margin"), F.desc("sim"), F.asc("tgt_id")
+    )
+    my = Window.partitionBy("tgt_id").orderBy(
+        F.desc("margin"), F.desc("sim"), F.asc("src_id")
+    )
+    return (
+        scored.withColumn("rx", F.row_number().over(mx))
+        .withColumn("ry", F.row_number().over(my))
+        .filter((F.col("rx") == 1) & (F.col("ry") == 1))
+        .select("src_id", "tgt_id", "sim", F.round("margin", 6).alias("margin"))
+    )
 
 
 def _stream_bitext_mining_sql() -> str:
@@ -1468,9 +1287,6 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic_dedup_hier row-for-row (same oracle). This is
     stream_dedup_incremental's embedding-space sibling — the admission
     gate an embedding-deduped 100 TB corpus runs at its front door."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.similarity import qcosine
     from capstone_etl_spark.operators.similarity import (
         SEMDEDUP_THRESHOLD,
@@ -1480,28 +1296,17 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
         hier_route_expr,
         quantize_fp,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_semded_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
-        members = assign.join(emb.select("vec_id", "embedding"), "vec_id").select(
-            F.col("vec_id").alias("vec_a"), "cell", F.col("embedding").alias("ne")
-        )
-        brow = _stream_static(hier_branch_cells_row(emb_q))
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    assign = _stream_static(hier_assign(emb_q).select("vec_id", "cell"))
+    members = assign.join(emb.select("vec_id", "embedding"), "vec_id").select(
+        F.col("vec_id").alias("vec_a"), "cell", F.col("embedding").alias("ne")
+    )
+    brow = _stream_static(hier_branch_cells_row(emb_q))
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         arriving = stream.select(
             F.col("vec_id").alias("vec_b"),
             F.col("embedding").alias("qe"),
@@ -1509,24 +1314,22 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         route = hier_route_expr()
         cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        best_cell = hier_best_cell_expr()
-        spairs = (
+        return (
             arriving.join(F.broadcast(brow), F.lit(True))
             .withColumn("route", route)
             .withColumn("cand", cand_cells)
-            .select("vec_b", "qe", best_cell.alias("cell"))
+            .select("vec_b", "qe", hier_best_cell_expr().alias("cell"))
             .join(members, "cell")
             .filter(F.col("vec_a") < F.col("vec_b"))
             .filter(qcosine("qe", "ne") >= SEMDEDUP_THRESHOLD)
             .select("vec_b", "vec_a")
         )
-        got = run_to_memory(spairs, f"{work}/checkpoint", output_mode="append")
-        dup = got.groupBy("vec_b").agg(F.min("vec_a").alias("dup_of"))
-        return assign.join(dup, assign.vec_id == dup.vec_b, "left").select(
-            "vec_id", "cell", F.col("dup_of").isNull().alias("keep"), "dup_of"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    got = _run(spark, sf_dir, transform, "append", table="embeddings")
+    dup = got.groupBy("vec_b").agg(F.min("vec_a").alias("dup_of"))
+    return assign.join(dup, assign.vec_id == dup.vec_b, "left").select(
+        "vec_id", "cell", F.col("dup_of").isNull().alias("keep"), "dup_of"
+    )
 
 
 def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1539,9 +1342,6 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hivf_cell_balance exactly (shared _cell_balance_tail + shared
     oracle) — the share/cap audit a 100 TB deployment watches while
     shards of vectors land."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
     from capstone_etl_spark.operators.similarity import (
         hier_best_cell_expr,
@@ -1549,38 +1349,25 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         hier_route_expr,
         quantize_fp,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_hivf_bal_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        brow = _stream_static(hier_branch_cells_row(emb_q))
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    quant = quantize_fp()
+    emb_q = load_table(spark, sf_dir, "embeddings").select("vec_id", quant.alias("vq"))
+    brow = _stream_static(hier_branch_cells_row(emb_q))
+
+    def transform(stream, _):
         route = hier_route_expr()
         cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        best_cell = hier_best_cell_expr()
         assigned = (
             stream.select(quant.alias("vq"))
             .join(F.broadcast(brow), F.lit(True))
             .withColumn("route", route)
             .withColumn("cand", cand_cells)
-            .select(best_cell.alias("cell"))
+            .select(hier_best_cell_expr().alias("cell"))
         )
-        agg = assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return _cell_balance_tail(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
+
+    snap = _run(spark, sf_dir, transform, "complete", table="embeddings")
+    return _cell_balance_tail(snap)
 
 
 def _stream_hivf_cell_balance_sql() -> str:
@@ -1612,7 +1399,9 @@ def stream_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = _run(
         spark,
         sf_dir,
-        lambda s, wm: changelog_state(s.withWatermark("ts", wm)),
+        lambda s, staged: changelog_state(
+            s.withWatermark("ts", _horizon_watermark(staged))
+        ),
         "complete",
     )
     return changelog_snapshot(snap)
@@ -1635,55 +1424,42 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collect_list order is nondeterministic — array_min doesn't
     care). The share/cap columns attach in the final batch projection
     over the drained ≈√N-row table."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
     from capstone_etl_spark.operators.similarity import quantize_fp, quantizer_seeds
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        seeds = quantizer_seeds(emb.select("vec_id", quant.alias("vq")))
-        # cached: the stream-static join re-evaluates the static side
-        # EVERY micro-batch — without this the full embeddings scan +
-        # hash + collect_list subtree runs once per trigger
-        # (stream_ann_topk's discipline)
-        seed_row = _stream_static(
-            seeds.agg(F.collect_list(F.struct("cell", "sq")).alias("seedlist"))
-        )
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        d2_structs = F.transform(
-            F.col("seedlist"),
-            lambda s: F.struct(
-                F.aggregate(
-                    F.zip_with(F.col("vq"), s["sq"], lambda x, y: (x - y) * (x - y)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
-                s["cell"].alias("cell"),
-            ),
-        )
+    quant = quantize_fp()
+    seeds = quantizer_seeds(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", quant.alias("vq"))
+    )
+    # truncated: the stream-static join re-evaluates the static side
+    # EVERY micro-batch — without this the full embeddings scan +
+    # hash + collect_list subtree runs once per trigger
+    # (stream_ann_topk's discipline)
+    seed_row = _stream_static(
+        seeds.agg(F.collect_list(F.struct("cell", "sq")).alias("seedlist"))
+    )
+    d2_structs = F.transform(
+        F.col("seedlist"),
+        lambda s: F.struct(
+            F.aggregate(
+                F.zip_with(F.col("vq"), s["sq"], lambda x, y: (x - y) * (x - y)),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            ).alias("d2"),
+            s["cell"].alias("cell"),
+        ),
+    )
+
+    def transform(stream, _):
         assigned = (
             stream.select(quant.alias("vq"))
             .join(F.broadcast(seed_row), F.lit(True))
             .select(F.array_min(d2_structs)["cell"].alias("cell"))
         )
-        agg = assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return _cell_balance_tail(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
+
+    snap = _run(spark, sf_dir, transform, "complete", table="embeddings")
+    return _cell_balance_tail(snap)
 
 
 def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1696,38 +1472,24 @@ def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     register file equals the batch sketch's exactly; the shared
     hll_finalize tail (estimator arithmetic) and the static exact
     counts produce the identical audit row — batch oracle verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.sketches import hll_finalize, hll_rho_rows
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_hll_")
-    try:
-        staging = f"{work}/staging"
-        docs = load_table(spark, sf_dir, "documents")
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         toks = stream.select("source", F.explode(tokenize("text")).alias("token"))
-        agg = hll_rho_rows(toks).groupBy("source", "bucket").agg(
+        return hll_rho_rows(toks).groupBy("source", "bucket").agg(
             F.max("rho").alias("reg")
         )
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        exact = (
-            docs.select("source", F.explode(tokenize("text")).alias("token"))
-            .distinct()
-            .groupBy("source")
-            .agg(F.count("*").cast("long").alias("n_exact"))
-        )
-        return hll_finalize(snap, exact)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = _run(spark, sf_dir, transform, "complete", table="documents")
+    exact = (
+        load_table(spark, sf_dir, "documents")
+        .select("source", F.explode(tokenize("text")).alias("token"))
+        .distinct()
+        .groupBy("source")
+        .agg(F.count("*").cast("long").alias("n_exact"))
+    )
+    return hll_finalize(snap, exact)
 
 
 def _stream_ivf_assign_sql() -> str:
@@ -1769,7 +1531,7 @@ def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ab_variant_col,
     )
 
-    def transform(stream, wm):
+    def transform(stream, _):
         prepared = stream.filter(
             F.col("event_type").isin(AB_EXPOSE_TYPE, AB_CONVERT_TYPE)
         ).select(
@@ -1823,7 +1585,7 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(F.lit(0), F.floor(F.col("value") / SQH_W)),
     ).cast("long")
 
-    def transform(stream, wm):
+    def transform(stream, _):
         return stream.groupBy(
             "event_type", bin_col.alias("bin")
         ).agg(F.count("*").alias("nb"))
@@ -1952,30 +1714,19 @@ def stream_group_dro(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on the drained snapshot: every micro-batch could re-weight
     the mixer without rescanning landed text. Oracle: the batch DRO
     SQL verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.quality import dro_release
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_dro_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        tf = stream.select(
-            "source", F.explode(tokenize("text")).alias("token")
-        ).groupBy("source", "token").agg(F.count("*").alias("cnt"))
-        snap = run_to_memory(tf, f"{work}/checkpoint", output_mode="complete")
-        return dro_release(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    snap = _run(
+        spark,
+        sf_dir,
+        lambda s, _: s.select("source", F.explode(tokenize("text")).alias("token"))
+        .groupBy("source", "token")
+        .agg(F.count("*").alias("cnt")),
+        "complete",
+        table="documents",
+    )
+    return dro_release(snap)
 
 
 def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1987,34 +1738,22 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained snapshot, so every micro-batch could re-publish the drift
     table without rescanning landed shards. Oracle: the batch KS SQL
     verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.textstats import ks_release
-    from capstone_etl_spark.session import checkpoint_truncate
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_ks_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        sl = stream.groupBy(
-            "source", F.col("n_chars").alias("len")
-        ).agg(F.count("*").alias("cs"))
-        snap = run_to_memory(sl, f"{work}/checkpoint", output_mode="complete")
-        # the KS tail references the count relation three times (grid
-        # spine, per-length totals, per-source totals); a memory-sink
-        # table self-joined that way carries conflicting references —
-        # truncate to a plain (bounded, release-tracked) scan first
-        return ks_release(checkpoint_truncate(snap))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    snap = _run(
+        spark,
+        sf_dir,
+        lambda s, _: s.groupBy("source", F.col("n_chars").alias("len")).agg(
+            F.count("*").alias("cs")
+        ),
+        "complete",
+        table="documents",
+    )
+    # the KS tail references the count relation three times (grid
+    # spine, per-length totals, per-source totals); a memory-sink
+    # table self-joined that way carries conflicting references —
+    # truncate to a plain (bounded, release-tracked) scan first
+    return ks_release(checkpoint_truncate(snap))
 
 
 def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2031,14 +1770,11 @@ def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     base row + totals), and a memory-sink table self-joined that way
     carries conflicting references."""
     from capstone_etl_spark.operators.events import rfm_release
-    from capstone_etl_spark.session import checkpoint_truncate
-    from capstone_etl_spark.streaming import stage_events, events_stream
 
-    work = tempfile.mkdtemp(prefix="spark_stream_rfm_")
-    try:
-        stage_events(spark, sf_dir, f"{work}/staging", n_files=4)
-        stream = events_stream(spark, f"{work}/staging", max_files_per_trigger=2)
-        users = stream.groupBy("user_id").agg(
+    snap = _run(
+        spark,
+        sf_dir,
+        lambda s, _: s.groupBy("user_id").agg(
             F.max(F.col("ts").cast("long")).alias("last_sec"),
             F.count("*").cast("long").alias("n_events"),
             # matches the batch _dsum shape exactly: exact decimal sum
@@ -2046,11 +1782,10 @@ def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
                 "monetary"
             ),
-        )
-        snap = run_to_memory(users, f"{work}/checkpoint", output_mode="complete")
-        return rfm_release(checkpoint_truncate(snap))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        "complete",
+    )
+    return rfm_release(checkpoint_truncate(snap))
 
 
 def stream_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2070,32 +1805,21 @@ def stream_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.sampling import split_column
     from capstone_etl_spark.operators.textstats import nb_release
-    from capstone_etl_spark.session import checkpoint_truncate
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_nb_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        cells = (
-            stream.filter(split_column(F.col("doc_id")) == "train")
-            .select("source", F.explode(tokenize("text")).alias("token"))
-            .groupBy("token", "source")
-            .agg(F.count("*").alias("c"))
-        )
-        snap = run_to_memory(cells, f"{work}/checkpoint", output_mode="complete")
-        docs = load_table(spark, sf_dir, "documents").withColumn(
-            "_is_train", split_column(F.col("doc_id")) == "train"
-        )
-        return nb_release(docs, checkpoint_truncate(snap))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    snap = _run(
+        spark,
+        sf_dir,
+        lambda s, _: s.filter(split_column(F.col("doc_id")) == "train")
+        .select("source", F.explode(tokenize("text")).alias("token"))
+        .groupBy("token", "source")
+        .agg(F.count("*").alias("c")),
+        "complete",
+        table="documents",
+    )
+    docs = load_table(spark, sf_dir, "documents").withColumn(
+        "_is_train", split_column(F.col("doc_id")) == "train"
+    )
+    return nb_release(docs, checkpoint_truncate(snap))
 
 
 def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2111,17 +1835,11 @@ def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint_truncate first: the tail references the per-user
     relation twice (pooled moments + per-variant rollup)."""
     from capstone_etl_spark.operators.events import ab_variant_col, cuped_release
-    from capstone_etl_spark.session import checkpoint_truncate
 
-    work = tempfile.mkdtemp(prefix="spark_stream_cuped_")
-    try:
-        staged = stage_events(spark, sf_dir, f"{work}/staging", n_files=4)
-        t_mid = staged.agg(
-            ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("m")
-        ).first()[0]
-        stream = events_stream(spark, f"{work}/staging", max_files_per_trigger=2)
+    def transform(stream, staged):
+        t_mid = _ts_midpoint(staged)
         dec = F.col("value").cast("decimal(18,2)")
-        per_user = (
+        return (
             stream.groupBy("user_id")
             .agg(
                 F.coalesce(
@@ -2135,10 +1853,9 @@ def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("user_id", ab_variant_col().alias("variant"), "x", "y")
         )
-        snap = run_to_memory(per_user, f"{work}/checkpoint", output_mode="complete")
-        return cuped_release(checkpoint_truncate(snap))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    snap = _run(spark, sf_dir, transform, "complete")
+    return cuped_release(checkpoint_truncate(snap))
 
 
 def stream_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2154,29 +1871,20 @@ def stream_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxima relation, and memory-sink self-references conflict."""
     from capstone_etl_spark.functions.text import tokenize
     from capstone_etl_spark.operators.quality import _pareto_toks, pareto_release
-    from capstone_etl_spark.session import checkpoint_truncate
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_pareto_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        per_x = stream.select(
+    snap = _run(
+        spark,
+        sf_dir,
+        lambda s, _: s.select(
             "n_chars",
             F.size(F.array_distinct(tokenize("text"))).cast("long").alias("ndt"),
-        ).groupBy("n_chars").agg(F.max("ndt").alias("mx"))
-        snap = run_to_memory(per_x, f"{work}/checkpoint", output_mode="complete")
-        return pareto_release(
-            _pareto_toks(spark, sf_dir), checkpoint_truncate(snap)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .groupBy("n_chars")
+        .agg(F.max("ndt").alias("mx")),
+        "complete",
+        table="documents",
+    )
+    return pareto_release(_pareto_toks(spark, sf_dir), checkpoint_truncate(snap))
 
 
 def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2191,17 +1899,10 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed events. Oracle: the batch PSI SQL verbatim (the grid
     literals are computed by the same expressions the batch plan
     evaluates, so the releases agree exactly)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.events import PSI_BINS, psi_release
 
-    work = tempfile.mkdtemp(prefix="spark_stream_psi_")
-    try:
-        staged = stage_events(spark, sf_dir, f"{work}/staging", n_files=4)
-        t_mid = staged.agg(
-            ((F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts"))) / 2).alias("m")
-        ).first()[0]
+    def transform(stream, staged):
+        t_mid = _ts_midpoint(staged)
         v_lo, v_hi = staged.filter(F.unix_micros("ts") <= t_mid).agg(
             F.min("value"), F.max("value")
         ).first()
@@ -2211,16 +1912,13 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             width > 0,
             F.greatest(F.lit(0), F.least(F.lit(PSI_BINS - 1), bin_raw)),
         ).otherwise(F.lit(0))
-        stream = events_stream(spark, f"{work}/staging", max_files_per_trigger=2)
-        agg = stream.groupBy(
+        return stream.groupBy(
             "event_type",
             (F.unix_micros("ts") <= F.lit(t_mid)).alias("is_ref"),
             bin_id.cast("long").alias("bin"),
         ).agg(F.count("*").alias("n"))
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return psi_release(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return psi_release(_run(spark, sf_dir, transform, "complete"))
 
 
 def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2254,9 +1952,8 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         KM_BUCKET_US,
         km_curve,
     )
-    from capstone_etl_spark.session import checkpoint_truncate
 
-    def transform(stream, wm):
+    def transform(stream, _):
         ev = stream.select(
             "user_id",
             F.col("event_type"),
@@ -2325,27 +2022,16 @@ def stream_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch release SQL verbatim (the noise is a deterministic
     function of (salt, source), so stream and batch releases agree
     exactly)."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.privacy import dp_release
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_dp_")
-    try:
-        staging = f"{work}/staging"
-        load_table(spark, sf_dir, "documents").repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        agg = stream.groupBy("source").agg(F.count("*").alias("n_docs"))
-        snap = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        return dp_release(snap)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    snap = _run(
+        spark,
+        sf_dir,
+        lambda s, _: s.groupBy("source").agg(F.count("*").alias("n_docs")),
+        "complete",
+        table="documents",
+    )
+    return dp_release(snap)
 
 
 def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2396,9 +2082,6 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild); the production deployment reads them as published
     artifacts and pays only the streaming legs + the drained
     assembly."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.corpus import MIN_CHARS, N_SHARDS
@@ -2411,54 +2094,43 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_df_cap,
     )
     from capstone_etl_spark.operators.sampling import split_column
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_manifest_")
-    try:
-        # static index legs go through checkpoint_truncate, not cached()
-        # (r12, guide §1.2/§5): a cache is matched BY PLAN, and the
-        # per-micro-batch IncrementalExecution re-derives the stream
-        # plan each trigger, so parts of the deep static lineage were
-        # re-executed per batch (measured: 1211 -> 808 tasks, 43 -> 37
-        # MB shuffle write, wall roughly halved on quiet pairs, hash
-        # identical). A LogicalRDD is position-matched — every batch
-        # reads the materialized blocks, full stop. Same trade the
-        # production deployment makes by reading published artifacts.
-        _static = _stream_static
-        docs = load_table(spark, sf_dir, "documents")
-        # static index artifacts — ONE tokenize pass, two cap domains
-        # (the batch operator's exact sharing shape, corpus.py)
-        toks_b = docs.select(
-            "doc_id", (F.col("n_chars") >= MIN_CHARS).alias("kept"), tokenize("text").alias("toks")
+    # static index legs go through checkpoint_truncate, not cached()
+    # (r12, guide §1.2/§5): a cache is matched BY PLAN, and the
+    # per-micro-batch IncrementalExecution re-derives the stream
+    # plan each trigger, so parts of the deep static lineage were
+    # re-executed per batch (measured: 1211 -> 808 tasks, 43 -> 37
+    # MB shuffle write, wall roughly halved on quiet pairs, hash
+    # identical). A LogicalRDD is position-matched — every batch
+    # reads the materialized blocks, full stop. Same trade the
+    # production deployment makes by reading published artifacts.
+    _static = _stream_static
+    docs = load_table(spark, sf_dir, "documents")
+    # static index artifacts — ONE tokenize pass, two cap domains
+    # (the batch operator's exact sharing shape, corpus.py)
+    toks_b = docs.select(
+        "doc_id", (F.col("n_chars") >= MIN_CHARS).alias("kept"), tokenize("text").alias("toks")
+    )
+    uncapped = _static(
+        toks_b.select(
+            "doc_id", "kept", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle")
         )
-        uncapped = _static(
-            toks_b.select(
-                "doc_id", "kept", F.explode(token_ngrams("toks", NGRAM_N)).alias("shingle")
-            )
-            .select("doc_id", "kept", md5_hash60(F.col("shingle")).alias("sh"))
-            .distinct()
-        )
-        kept_sh = _static(
-            shingle_df_cap(uncapped.filter(F.col("kept")).select("doc_id", "sh"))
-        )
-        full_sh = _static(shingle_df_cap(uncapped.select("doc_id", "sh")))
-        kept_sizes = kept_sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-        dd_index = kept_sh.select("sh", F.col("doc_id").alias("partner"))
-        bench = full_sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
-            "sh", F.col("doc_id").alias("bench_doc")
-        )
-        full_sizes = full_sh.groupBy("doc_id").agg(F.count("*").alias("szf"))
-        sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
+        .select("doc_id", "kept", md5_hash60(F.col("shingle")).alias("sh"))
+        .distinct()
+    )
+    kept_sh = _static(
+        shingle_df_cap(uncapped.filter(F.col("kept")).select("doc_id", "sh"))
+    )
+    full_sh = _static(shingle_df_cap(uncapped.select("doc_id", "sh")))
+    kept_sizes = kept_sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    dd_index = kept_sh.select("sh", F.col("doc_id").alias("partner"))
+    bench = full_sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
+        "sh", F.col("doc_id").alias("bench_doc")
+    )
+    full_sizes = full_sh.groupBy("doc_id").agg(F.count("*").alias("szf"))
+    sz_b = bench.groupBy("bench_doc").agg(F.count("*").alias("sz_b"))
 
-        staging = f"{work}/staging"
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         stoks = stream.select(
             "doc_id",
             (F.col("n_chars") >= MIN_CHARS).alias("kept"),
@@ -2538,7 +2210,7 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         jac_s = F.col("cnt") / (F.col("za") + F.col("zb") - F.col("cnt"))
         cont_s = F.col("cnt") / F.col("zb")
-        agg = (
+        return (
             doc_rows2.unionByName(dd_rows)
             .unionByName(dc_rows)
             .groupBy("kind", "a", "b", "za", "zb", "split")
@@ -2552,47 +2224,44 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        # corpus-scale shingle joins run per trigger here — throughput
-        # work, not bounded-state overhead — so keep the session's full
-        # shuffle parallelism (state_partitions=None)
-        got = cached(
-            run_to_memory(
-                agg, f"{work}/checkpoint", output_mode="complete", state_partitions=None
-            )
-        )
 
-        # batch verdict assembly over the drained (already-thresholded)
-        # state table
-        pairs = got.filter(F.col("kind") == "dd").select("a", "b")
-        edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    # corpus-scale shingle joins run per trigger here — throughput
+    # work, not bounded-state overhead — so keep the session's full
+    # shuffle parallelism (state_partitions=None)
+    got = cached(
+        _run(spark, sf_dir, transform, "complete", table="documents", state_partitions=None)
+    )
+
+    # batch verdict assembly over the drained (already-thresholded)
+    # state table
+    pairs = got.filter(F.col("kind") == "dd").select("a", "b")
+    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+    labels = connected_components(edges)
+    contaminated = (
+        got.filter(F.col("kind") == "dc")
+        .select(F.col("a").alias("doc_id"))
+        .distinct()
+    )
+    admitted = (
+        got.filter(F.col("kind") == "doc")
+        .select(
+            F.col("a").alias("doc_id"),
+            F.col("b").alias("shard_id"),
+            F.col("s1").alias("n_tokens"),
+            "split",
         )
-        labels = connected_components(edges)
-        contaminated = (
-            got.filter(F.col("kind") == "dc")
-            .select(F.col("a").alias("doc_id"))
-            .distinct()
-        )
-        admitted = (
-            got.filter(F.col("kind") == "doc")
-            .select(
-                F.col("a").alias("doc_id"),
-                F.col("b").alias("shard_id"),
-                F.col("s1").alias("n_tokens"),
-                "split",
-            )
-            .join(labels, "doc_id", "left")
-            .filter(F.col("doc_id") == F.coalesce("label", "doc_id"))
-            .join(contaminated, "doc_id", "left_anti")
-        )
-        return admitted.groupBy("split", "shard_id").agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.min("doc_id").cast("long").alias("min_doc_id"),
-            F.max("doc_id").cast("long").alias("max_doc_id"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .join(labels, "doc_id", "left")
+        .filter(F.col("doc_id") == F.coalesce("label", "doc_id"))
+        .join(contaminated, "doc_id", "left_anti")
+    )
+    return admitted.groupBy("split", "shard_id").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("n_tokens"),
+        F.min("doc_id").cast("long").alias("min_doc_id"),
+        F.max("doc_id").cast("long").alias("max_doc_id"),
+    )
 
 
 def _stream_training_manifest_sql() -> str:
@@ -2618,29 +2287,15 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim. The nested-sample property (level L+1 ⊆ level L) is what
     makes this THE 100 TB shape: shards sketched at different corpus
     epochs merge by re-filter + union, never by resampling."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.operators.sketches import KLL_QS, _kll_stats
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_kll_")
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        h = md5_hash60(F.concat(F.lit("kll:"), F.col("doc_id").cast("string")))
-        vals_b = docs.select("source", F.col("n_chars").alias("v"), h.alias("h"))
-        stats = _stream_static(_kll_stats(vals_b))
+    docs = load_table(spark, sf_dir, "documents")
+    h = md5_hash60(F.concat(F.lit("kll:"), F.col("doc_id").cast("string")))
+    vals_b = docs.select("source", F.col("n_chars").alias("v"), h.alias("h"))
+    stats = _stream_static(_kll_stats(vals_b))
 
-        staging = f"{work}/staging"
-        docs.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         svals = stream.select("source", F.col("n_chars").alias("v"), h.alias("h"))
         surv = (
             svals.join(stats, "source")
@@ -2650,93 +2305,90 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ticks = svals.select(
             F.lit("n").alias("kind"), "source", F.lit(None).cast("long").alias("v")
         )
-        agg = (
+        return (
             surv.unionByName(ticks)
             .groupBy("kind", "source", "v")
             .agg(F.count("*").alias("c"))
         )
-        got = cached(run_to_memory(agg, f"{work}/checkpoint", output_mode="complete"))
 
-        # batch assembly over the drained state (the n ticks reproduce
-        # the batch per-source counts, so L/w/r recompute identically)
-        samp = got.filter(F.col("kind") == "s").select("source", "v", "c")
-        wv = Window.partitionBy("source").orderBy("v").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        samp_cum = samp.join(F.broadcast(stats), "source").select(
-            "source", "v", (F.sum(F.col("c")).over(wv) * F.col("w")).alias("cumw")
-        )
-        szs = samp.groupBy("source").agg(
-            F.sum("c").cast("long").alias("sample_size"), F.max("v").alias("vmax")
-        )
-        # qcfg and samp_cum both descend from the drained sink — truncate
-        # one side's lineage so the join carries no conflicting
-        # references (the sink-self-join lesson, checkpoint_truncate)
-        from capstone_etl_spark.session import checkpoint_truncate
+    got = cached(_run(spark, sf_dir, transform, "complete", table="documents"))
 
-        qcfg = checkpoint_truncate(
-            got.filter(F.col("kind") == "n")
-            .groupBy("source")
-            .agg(F.sum("c").cast("long").alias("n"))
-            .join(F.broadcast(stats.select("source", "L")), "source")
-            .select(
-                F.col("source").alias("qsrc"), "n", "L",
-                F.explode(F.array(*[F.lit(q) for q in KLL_QS])).alias("q"),
-            )
-            .select(
-                "qsrc", "n", "L", "q",
-                F.ceil(F.col("q") * F.col("n").cast("double")).cast("long").alias("r"),
-            )
+    # batch assembly over the drained state (the n ticks reproduce
+    # the batch per-source counts, so L/w/r recompute identically)
+    samp = got.filter(F.col("kind") == "s").select("source", "v", "c")
+    wv = Window.partitionBy("source").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    samp_cum = samp.join(F.broadcast(stats), "source").select(
+        "source", "v", (F.sum(F.col("c")).over(wv) * F.col("w")).alias("cumw")
+    )
+    szs = samp.groupBy("source").agg(
+        F.sum("c").cast("long").alias("sample_size"), F.max("v").alias("vmax")
+    )
+    # qcfg and samp_cum both descend from the drained sink — truncate
+    # one side's lineage so the join carries no conflicting
+    # references (the sink-self-join lesson, checkpoint_truncate)
+    qcfg = checkpoint_truncate(
+        got.filter(F.col("kind") == "n")
+        .groupBy("source")
+        .agg(F.sum("c").cast("long").alias("n"))
+        .join(F.broadcast(stats.select("source", "L")), "source")
+        .select(
+            F.col("source").alias("qsrc"), "n", "L",
+            F.explode(F.array(*[F.lit(q) for q in KLL_QS])).alias("q"),
         )
-        est = (
-            qcfg.join(
-                samp_cum,
-                (F.col("qsrc") == F.col("source")) & (F.col("cumw") >= F.col("r")),
-                "left",
-            )
-            .groupBy(F.col("qsrc").alias("source"), "q", "n", "L", "r")
-            .agg(F.min("v").alias("est_v"))
+        .select(
+            "qsrc", "n", "L", "q",
+            F.ceil(F.col("q") * F.col("n").cast("double")).cast("long").alias("r"),
         )
-        wvx = Window.partitionBy("source").orderBy("v").rowsBetween(
-            Window.unboundedPreceding, 0
+    )
+    est = (
+        qcfg.join(
+            samp_cum,
+            (F.col("qsrc") == F.col("source")) & (F.col("cumw") >= F.col("r")),
+            "left",
         )
-        val_cum = (
-            vals_b.groupBy("source", "v")
-            .agg(F.count("*").alias("cnt"))
-            .select("source", "v", F.sum("cnt").over(wvx).alias("cum"))
+        .groupBy(F.col("qsrc").alias("source"), "q", "n", "L", "r")
+        .agg(F.min("v").alias("est_v"))
+    )
+    wvx = Window.partitionBy("source").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    val_cum = (
+        vals_b.groupBy("source", "v")
+        .agg(F.count("*").alias("cnt"))
+        .select("source", "v", F.sum("cnt").over(wvx).alias("cum"))
+    )
+    exact = (
+        qcfg.select("qsrc", "q", "r")
+        .join(
+            val_cum,
+            (F.col("qsrc") == F.col("source")) & (F.col("cum") >= F.col("r")),
         )
-        exact = (
-            qcfg.select("qsrc", "q", "r")
-            .join(
-                val_cum,
-                (F.col("qsrc") == F.col("source")) & (F.col("cum") >= F.col("r")),
-            )
-            .groupBy(F.col("qsrc").alias("source"), "q")
-            .agg(F.min("v").cast("double").alias("exact_quantile"))
+        .groupBy(F.col("qsrc").alias("source"), "q")
+        .agg(F.min("v").cast("double").alias("exact_quantile"))
+    )
+    return (
+        est.join(szs, "source")
+        .join(exact, ["source", "q"])
+        .select(
+            "source",
+            "q",
+            F.col("n").cast("long").alias("n"),
+            F.col("L").cast("long").alias("level"),
+            "sample_size",
+            F.col("r").alias("target_rank"),
+            F.coalesce(F.col("est_v"), F.col("vmax")).cast("double").alias("est_quantile"),
+            "exact_quantile",
+            F.round(
+                F.abs(
+                    F.coalesce(F.col("est_v"), F.col("vmax")).cast("double")
+                    - F.col("exact_quantile")
+                ),
+                6,
+            ).alias("abs_error"),
         )
-        return (
-            est.join(szs, "source")
-            .join(exact, ["source", "q"])
-            .select(
-                "source",
-                "q",
-                F.col("n").cast("long").alias("n"),
-                F.col("L").cast("long").alias("level"),
-                "sample_size",
-                F.col("r").alias("target_rank"),
-                F.coalesce(F.col("est_v"), F.col("vmax")).cast("double").alias("est_quantile"),
-                "exact_quantile",
-                F.round(
-                    F.abs(
-                        F.coalesce(F.col("est_v"), F.col("vmax")).cast("double")
-                        - F.col("exact_quantile")
-                    ),
-                    6,
-                ).alias("abs_error"),
-            )
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_kll_sketch_sql() -> str:
@@ -2768,9 +2420,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     one cell's members (quantizer law ≈√N_base); nothing aggregates
     in-stream, so re-delivery cannot corrupt state (there is none) and
     the sink is verdict-relevant rows only."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.dedup import _is_delta
     from capstone_etl_spark.operators.similarity import (
         BRANCH_PROBES,
@@ -2787,38 +2436,27 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
         NOISE_MIN_VOTES,
         _noise_verdict_cols,
     )
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        quant = quantize_fp()
-        emb_q = emb.select("vec_id", quant.alias("vq"))
-        base_q = emb_q.filter(~_is_delta(F.col("vec_id")))
-        # truncated, not cached: the stream-static join re-plans the
-        # static side EVERY micro-batch and a deep cached lineage was
-        # partially re-executed per trigger (_stream_static docstring)
-        index_row = _stream_static(hier_branch_cells_row(base_q))
-        members = _stream_static(
-            hier_assign(base_q)
-            .join(emb.select("vec_id", "label"), "vec_id")
-            .select(
-                F.col("vec_id").alias("vec_b"),
-                "cell",
-                F.col("vq").alias("qb"),
-                F.col("label").alias("lb"),
-            )
+    emb = load_table(spark, sf_dir, "embeddings")
+    quant = quantize_fp()
+    emb_q = emb.select("vec_id", quant.alias("vq"))
+    base_q = emb_q.filter(~_is_delta(F.col("vec_id")))
+    # truncated, not cached: the stream-static join re-plans the
+    # static side EVERY micro-batch and a deep cached lineage was
+    # partially re-executed per trigger (_stream_static docstring)
+    index_row = _stream_static(hier_branch_cells_row(base_q))
+    members = _stream_static(
+        hier_assign(base_q)
+        .join(emb.select("vec_id", "label"), "vec_id")
+        .select(
+            F.col("vec_id").alias("vec_b"),
+            "cell",
+            F.col("vq").alias("qb"),
+            F.col("label").alias("lb"),
         )
+    )
 
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    def transform(stream, _):
         routed = (
             stream.filter(_is_delta(F.col("vec_id")))
             .select(
@@ -2836,47 +2474,44 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
                 hier_best_cell_expr().alias("cell"),
             )
         )
-        cands = routed.join(members, "cell").select(
+        return routed.join(members, "cell").select(
             "vec_a",
             "vec_b",
             _d2_fold("qa", F.col("qb")).alias("d2p"),
             (F.col("la") == F.col("lb")).cast("int").alias("match"),
         )
-        drained = run_to_memory(cands, f"{work}/checkpoint", output_mode="append")
 
-        # batch verdict tail over the drained candidate table
-        from pyspark.sql import Window
+    drained = _run(spark, sf_dir, transform, "append", table="embeddings")
 
-        wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
-        votes = (
-            drained.withColumn("rnk", F.row_number().over(wv))
-            .filter(F.col("rnk") <= NOISE_K)
-            .groupBy("vec_a")
-            .agg(
-                F.count("*").alias("n_votes"),
-                F.sum("match").alias("n_agree"),
-            )
-            .withColumnRenamed("vec_a", "vec_id")
+    # batch verdict tail over the drained candidate table
+    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
+    votes = (
+        drained.withColumn("rnk", F.row_number().over(wv))
+        .filter(F.col("rnk") <= NOISE_K)
+        .groupBy("vec_a")
+        .agg(
+            F.count("*").alias("n_votes"),
+            F.sum("match").alias("n_agree"),
         )
-        # delta rows with their routed cells, recomputed batch-side for
-        # the left join (cheap: |delta| rows against the hier index)
-        delta_rows = (
-            _hier_cand_seed(emb_q.filter(_is_delta(F.col("vec_id"))), index_q=base_q)
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("d2", "cell")).alias("m"))
-            .select("vec_id", F.col("m.cell").alias("cell"))
-            .join(emb.select("vec_id", "label"), "vec_id")
-        )
-        out = delta_rows.join(votes, "vec_id", "left").select(
-            "vec_id", "label", "cell", *_noise_verdict_cols()
-        )
-        return out.withColumn(
-            "suspect",
-            (F.col("n_votes") >= NOISE_MIN_VOTES)
-            & (F.col("n_agree") * 2 < F.col("n_votes")),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .withColumnRenamed("vec_a", "vec_id")
+    )
+    # delta rows with their routed cells, recomputed batch-side for
+    # the left join (cheap: |delta| rows against the hier index)
+    delta_rows = (
+        _hier_cand_seed(emb_q.filter(_is_delta(F.col("vec_id"))), index_q=base_q)
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "cell")).alias("m"))
+        .select("vec_id", F.col("m.cell").alias("cell"))
+        .join(emb.select("vec_id", "label"), "vec_id")
+    )
+    out = delta_rows.join(votes, "vec_id", "left").select(
+        "vec_id", "label", "cell", *_noise_verdict_cols()
+    )
+    return out.withColumn(
+        "suspect",
+        (F.col("n_votes") >= NOISE_MIN_VOTES)
+        & (F.col("n_agree") * 2 < F.col("n_votes")),
+    )
 
 
 def _stream_label_noise_sql() -> str:
@@ -2897,37 +2532,24 @@ def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift, base sd, standardized shift, all ROUND(·,6)), so the
     oracle is EMBEDDING_SHIFT_AUDIT_SQL verbatim. Decimal sums are
     order-free, so micro-batch arrival order cannot change a digit."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.operators.dedup import _is_delta
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        dec = lambda c: c.cast("decimal(20,12)")  # noqa: E731
-        base = _stream_static(
-            emb.filter(~_is_delta(F.col("vec_id")))
-            .select(F.posexplode("embedding").alias("d", "xf"))
-            .select("d", F.col("xf").cast("double").alias("x"))
-            .groupBy("d")
-            .agg(
-                F.count("*").cast("long").alias("n_base"),
-                F.sum(dec(F.col("x"))).alias("sum_b"),
-                F.sum(dec(F.col("x") * F.col("x"))).alias("ssq_b"),
-            )
+    emb = load_table(spark, sf_dir, "embeddings")
+    dec = lambda c: c.cast("decimal(20,12)")  # noqa: E731
+    base = _stream_static(
+        emb.filter(~_is_delta(F.col("vec_id")))
+        .select(F.posexplode("embedding").alias("d", "xf"))
+        .select("d", F.col("xf").cast("double").alias("x"))
+        .groupBy("d")
+        .agg(
+            F.count("*").cast("long").alias("n_base"),
+            F.sum(dec(F.col("x"))).alias("sum_b"),
+            F.sum(dec(F.col("x") * F.col("x"))).alias("ssq_b"),
         )
-        staging = f"{work}/staging"
-        emb.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        delta_agg = (
+    )
+
+    def transform(stream, _):
+        return (
             stream.filter(_is_delta(F.col("vec_id")))
             .select(F.posexplode("embedding").alias("d", "xf"))
             .select("d", F.col("xf").cast("double").alias("x"))
@@ -2937,37 +2559,34 @@ def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(dec(F.col("x"))).alias("sum_d"),
             )
         )
-        drained = run_to_memory(
-            delta_agg, f"{work}/checkpoint", output_mode="complete"
-        )
-        joined = base.join(drained, "d", "left").select(
-            "d",
-            "n_base",
-            F.coalesce(F.col("n_delta"), F.lit(0).cast("long")).alias("n_delta"),
-            "sum_b",
-            "sum_d",
-            "ssq_b",
-        )
-        # the batch operator's derived tail, expression for expression
-        base_mean = F.round(F.col("sum_b").cast("double") / F.col("n_base"), 6)
-        delta_mean = F.round(F.col("sum_d").cast("double") / F.col("n_delta"), 6)
-        base_var = (
-            F.col("ssq_b").cast("double") / F.col("n_base") - base_mean * base_mean
-        )
-        base_sd = F.round(F.sqrt(F.greatest(base_var, F.lit(0.0))), 6)
-        shift = F.round(delta_mean - base_mean, 6)
-        return joined.select(
-            "d",
-            "n_base",
-            "n_delta",
-            base_mean.alias("base_mean"),
-            delta_mean.alias("delta_mean"),
-            shift.alias("shift"),
-            base_sd.alias("base_sd"),
-            F.when(base_sd > 0, F.round(shift / base_sd, 6)).alias("std_shift"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    drained = _run(spark, sf_dir, transform, "complete", table="embeddings")
+    joined = base.join(drained, "d", "left").select(
+        "d",
+        "n_base",
+        F.coalesce(F.col("n_delta"), F.lit(0).cast("long")).alias("n_delta"),
+        "sum_b",
+        "sum_d",
+        "ssq_b",
+    )
+    # the batch operator's derived tail, expression for expression
+    base_mean = F.round(F.col("sum_b").cast("double") / F.col("n_base"), 6)
+    delta_mean = F.round(F.col("sum_d").cast("double") / F.col("n_delta"), 6)
+    base_var = (
+        F.col("ssq_b").cast("double") / F.col("n_base") - base_mean * base_mean
+    )
+    base_sd = F.round(F.sqrt(F.greatest(base_var, F.lit(0.0))), 6)
+    shift = F.round(delta_mean - base_mean, 6)
+    return joined.select(
+        "d",
+        "n_base",
+        "n_delta",
+        base_mean.alias("base_mean"),
+        delta_mean.alias("delta_mean"),
+        shift.alias("shift"),
+        base_sd.alias("base_sd"),
+        F.when(base_sd > 0, F.round(shift / base_sd, 6)).alias("std_shift"),
+    )
 
 
 def _stream_embedding_shift_sql() -> str:
@@ -2989,42 +2608,28 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     share/mean projection (total = sum of drained pops — the stream
     saw the whole corpus), so the oracle is CORESET_COVERAGE_AUDIT_SQL
     verbatim."""
-    import shutil
-    import tempfile
-
     from capstone_etl_spark.functions.vectors import dot_long
     from capstone_etl_spark.operators.similarity import quantize_fp
     from capstone_etl_spark.operators.valuation import _kcenter_select
-    from capstone_etl_spark.session import cached
-    from capstone_etl_spark.sources.tables import load_table
 
-    work = tempfile.mkdtemp(prefix="spark_stream_emb_")
-    try:
-        emb_full = load_table(spark, sf_dir, "embeddings")
-        _, acc = _kcenter_select(spark, sf_dir)
-        # centers ride as fixed-point lists + exact squared norms —
-        # the quantized-cosine rank-key discipline (valuation.py module
-        # docstring): distance per arriving row is an exact BIGINT
-        # fold, then sqrt/mul/div on bit-identical doubles
-        center_row = _stream_static(
-            acc.agg(
-                F.collect_list(
-                    F.struct(
-                        F.col("vec_id").alias("center_id"),
-                        F.col("vq").alias("sq"),
-                        F.col("qn2").alias("sn2"),
-                    )
-                ).alias("centers")
-            )
+    _, acc = _kcenter_select(spark, sf_dir)
+    # centers ride as fixed-point lists + exact squared norms —
+    # the quantized-cosine rank-key discipline (valuation.py module
+    # docstring): distance per arriving row is an exact BIGINT
+    # fold, then sqrt/mul/div on bit-identical doubles
+    center_row = _stream_static(
+        acc.agg(
+            F.collect_list(
+                F.struct(
+                    F.col("vec_id").alias("center_id"),
+                    F.col("vq").alias("sq"),
+                    F.col("qn2").alias("sn2"),
+                )
+            ).alias("centers")
         )
-        staging = f"{work}/staging"
-        emb_full.repartition(4).write.parquet(staging)
-        schema = spark.read.parquet(staging).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
+    )
+
+    def transform(stream, _):
         d_structs = F.transform(
             F.col("centers"),
             lambda s: F.struct(
@@ -3053,25 +2658,24 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.array_min(d_structs).alias("m"))
             .select(F.col("m.center_id").alias("center_id"), F.col("m.d").alias("d"))
         )
-        agg = assigned.groupBy("center_id").agg(
+        return assigned.groupBy("center_id").agg(
             F.count("*").cast("long").alias("pop"),
             F.sum(F.col("d").cast("decimal(20,12)")).alias("sum_d"),
             F.max("d").alias("max_d"),
         )
-        drained = run_to_memory(agg, f"{work}/checkpoint", output_mode="complete")
-        total = drained.agg(F.sum("pop").alias("total"))
-        return (
-            drained.join(F.broadcast(total), F.lit(True))
-            .select(
-                "center_id",
-                "pop",
-                (F.col("pop") / F.col("total")).alias("share"),
-                (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
-                "max_d",
-            )
+
+    drained = _run(spark, sf_dir, transform, "complete", table="embeddings")
+    total = drained.agg(F.sum("pop").alias("total"))
+    return (
+        drained.join(F.broadcast(total), F.lit(True))
+        .select(
+            "center_id",
+            "pop",
+            (F.col("pop") / F.col("total")).alias("share"),
+            (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
+            "max_d",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def _stream_coreset_coverage_sql() -> str:

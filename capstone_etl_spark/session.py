@@ -8,6 +8,7 @@ cluster. Everything here is stock Spark conf — no custom extensions.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,6 +23,22 @@ from pyspark.sql import DataFrame, SparkSession
 _LIVE_CACHES: list[DataFrame] = []
 # (result df, persisted-RDD handles, reliable-checkpoint path or None, sc)
 _LIVE_CHECKPOINTS: list[tuple[DataFrame, list, str | None, object]] = []
+
+
+def env_int(name: str, default: int) -> int:
+    """Integer knob from the environment. Unset → `default`; a value
+    that is not an integer warns and falls back to `default` instead of
+    failing whatever reads it."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        warnings.warn(
+            f"{name}={raw!r} is not an integer; using {default}", RuntimeWarning, stacklevel=2
+        )
+        return default
 
 
 def cached(df: DataFrame) -> DataFrame:
@@ -148,8 +165,8 @@ def get_spark(
       streaming via applyInPandasWithState, multimodal decode stubs
       via mapInPandas) — everything else is JVM-side.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(min(int(cpus), 32))))
+    cpus = cpus or env_int("SPARK_GRAFT_CPUS", 32)
+    shuffle = shuffle_partitions or env_int("SPARK_GRAFT_SHUFFLE", min(int(cpus), 32))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

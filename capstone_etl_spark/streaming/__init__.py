@@ -10,8 +10,9 @@ enforced two ways:
 - pytest: each streaming form runs multi-batch (maxFilesPerTrigger=1)
   over a file-staged copy of `events` and must equal its batch form
   (tests/test_streaming.py);
-- driver oracle: stream_* queries (operators/streaming_queries.py) run
-  the full readStream → watermark → agg → availableNow pipeline and
+- driver oracle: stream_* queries (operators/streaming_queries.py)
+  replay a staged events, documents or embeddings table through one
+  harness (`_run`: readStream → stateful operator → availableNow) and
   hash-compare against DuckDB SQL.
 """
 

@@ -11,9 +11,10 @@ sinks/writers.py are the batch halves of that story).
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from capstone_etl_spark.session import env_int
 
 _COUNTER = itertools.count()
 
@@ -55,7 +56,7 @@ def run_to_memory(
         # tables, not a semantic limit — scale-point runs (sf1/sf10,
         # tools/run_scale_point.py) override it via the environment so
         # a legitimately-bigger drain isn't misread as a hang
-        timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT_SEC", "300"))
+        timeout_sec = env_int("SPARK_GRAFT_STREAM_TIMEOUT_SEC", 300)
     qname = name or f"mem_sink_{next(_COUNTER)}"
     writer = (
         sdf.writeStream.format("memory")

@@ -1,12 +1,13 @@
-"""Streaming sources for the events table.
+"""Streaming sources: file-staged table replays and the events stream.
 
 Structured Streaming's file source monitors a directory and processes
 newly-listed files per micro-batch — the open-source stand-in for a
-Kafka topic. `stage_events` materializes the (ts-normalized) events
-table into a staging directory through the S4 parquet sink;
-`events_stream` attaches a readStream to it. `max_files_per_trigger=1`
-forces one staged file per micro-batch, so tests exercise genuine
-multi-batch incremental state, not a single-batch degenerate run.
+Kafka topic. `stage_events` materializes a source table (the
+ts-normalized events table by default; also documents or embeddings)
+into a staging directory through the S4 parquet sink; `events_stream`
+attaches a readStream to it. `max_files_per_trigger=1` forces one
+staged file per micro-batch, so tests exercise genuine multi-batch
+incremental state, not a single-batch degenerate run.
 
 `events_stream` also takes a SOURCE FACTORY — any callable
 (spark) -> streaming DataFrame with the events schema — so a
@@ -44,12 +45,18 @@ EVENTS_DDL = (
 
 
 def stage_events(
-    spark: SparkSession, sf_dir: str, staging_dir: str, n_files: int = 4
+    spark: SparkSession,
+    sf_dir: str,
+    staging_dir: str,
+    n_files: int = 4,
+    table: str = "events",
 ) -> DataFrame:
-    """Write events as n_files parquet files into staging_dir; returns
-    the staged batch frame (schema donor for the stream)."""
-    ev = load_table(spark, sf_dir, "events").repartition(n_files)
-    write_parquet(ev, staging_dir)
+    """Write `table` (load_table's form of it: events ts-normalized,
+    documents/embeddings as scanned) as n_files parquet files into
+    staging_dir; returns the batch frame over the staged copy — the
+    stream's schema donor and the source of deploy-time literals."""
+    rows = load_table(spark, sf_dir, table).repartition(n_files)
+    write_parquet(rows, staging_dir)
     return spark.read.parquet(staging_dir)
 
 

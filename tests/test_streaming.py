@@ -4,6 +4,7 @@ watermark late-drop semantics, custom stateful operator."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as _t
 
@@ -367,47 +368,81 @@ def test_stream_conversion_survival_equals_batch(spark):
     assert got == want
 
 
-def test_km_state_pending_preexposure_conversion():
-    """Unit-level replay-order proof for the subtle KM state case: a
-    conversion that arrives BEFORE the exposure that precedes it in
-    event time must be held in the pending set and promoted once a
-    smaller exposure lands — never dropped, never wrongly counted."""
-    import pandas as pd
 
-    from capstone_etl_spark.streaming.stateful import (
-        _KM_NO_CONV,
-        _KM_NO_EXPOSE,
-        _km_accumulate,
-    )
+def test_run_harness_leaves_no_work_dirs(spark, tmp_path, monkeypatch):
+    """_run deletes its staging and checkpoint directories when the
+    replay succeeds AND when the query's transform raises."""
+    import tempfile
 
-    class FakeState:
+    from capstone_etl_spark.operators.streaming_queries import _run
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    seen = []
+
+    def count_types(stream, staged):
+        seen.extend(p.name for p in tmp_path.iterdir())
+        return stream.groupBy("event_type").count()
+
+    got = _run(spark, SF_DIR, count_types, "complete")
+    assert got.count() > 0
+    assert len(seen) == 1  # the work dir existed while the query was built
+    assert list(tmp_path.iterdir()) == []
+
+    def boom(stream, staged):
+        raise ValueError("transform failed")
+
+    with pytest.raises(ValueError, match="transform failed"):
+        _run(spark, SF_DIR, boom, "complete")
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_run_harness_documents_replay_is_multi_batch(spark):
+    """A documents replay through _run spans >= 2 micro-batches (4
+    staged files, 2 per trigger), so the stream state is genuinely
+    incremental; extra keywords (here the sink name) pass through to
+    run_to_memory."""
+    import threading
+    import uuid
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from capstone_etl_spark.operators.streaming_queries import _run
+
+    name = f"harness_probe_{uuid.uuid4().hex[:8]}"
+
+    class Batches(StreamingQueryListener):
         def __init__(self):
-            self.exists = False
-            self._v = None
+            self.ids, self.batches, self.done = set(), 0, threading.Event()
 
-        @property
-        def get(self):
-            return self._v
+        def onQueryStarted(self, event):
+            if event.name == name:
+                self.ids.add(str(event.id))
 
-        def update(self, v):
-            self._v = tuple(v)
-            self.exists = True
+        def onQueryProgress(self, event):
+            if event.progress.name == name and event.progress.numInputRows > 0:
+                self.batches += 1
 
-    st = FakeState()
-    # batch 1: conversion at t=50 arrives first — no exposure yet
-    list(_km_accumulate((1,), iter([pd.DataFrame({"kind": [1], "ts_us": [50]})]), st))
-    upd, fv, last, cand, pend = st._v
-    assert fv == _KM_NO_EXPOSE and cand == _KM_NO_CONV and list(pend) == [50]
-    # batch 2: exposure at t=100 — the t=50 conversion is PRE-exposure,
-    # stays pending (batch semantics: conversion must be > exposure)
-    list(_km_accumulate((1,), iter([pd.DataFrame({"kind": [0], "ts_us": [100]})]), st))
-    upd, fv, last, cand, pend = st._v
-    assert fv == 100 and cand == _KM_NO_CONV and list(pend) == [50]
-    # batch 3: an EARLIER exposure at t=10 lands — t=50 now qualifies
-    list(_km_accumulate((1,), iter([pd.DataFrame({"kind": [0], "ts_us": [10]})]), st))
-    upd, fv, last, cand, pend = st._v
-    assert fv == 10 and cand == 50 and list(pend) == []
-    # batch 4: a larger conversion never displaces the min qualifier
-    list(_km_accumulate((1,), iter([pd.DataFrame({"kind": [1], "ts_us": [70]})]), st))
-    upd, fv, last, cand, pend = st._v
-    assert cand == 50 and list(pend) == [] and last == 100
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            if str(event.id) in self.ids:
+                self.done.set()
+
+    listener = Batches()
+    spark.streams.addListener(listener)
+    try:
+        got = _run(
+            spark,
+            SF_DIR,
+            lambda s, _: s.groupBy("source").count(),
+            "complete",
+            table="documents",
+            name=name,
+        )
+        assert listener.done.wait(30)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.batches >= 2
+    n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
+    assert got.agg(F.sum("count")).first()[0] == n_docs

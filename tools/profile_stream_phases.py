@@ -1,9 +1,10 @@
 """Phase breakdown for one events-family stream query shape (r12).
 
-Splits the canonical `_run` pipeline (stage → watermark scan → stream
-drain) into timed phases with job/task counters per phase, so the
-stream family's fixed per-query cost can be attributed to staging
-write vs micro-batch machinery vs the drained tail. Run AFTER any
+Splits the replay-harness pipeline (`streaming_queries._run`: stage →
+watermark scan, which only event-time queries run → stream drain) into
+timed phases with job/task counters per phase, so the stream family's
+fixed per-query cost can be attributed to staging write vs micro-batch
+machinery vs the drained tail. Run AFTER any
 bench/gate finishes (never two Spark workloads at once).
 
     python tools/profile_stream_phases.py [n_reps]
