@@ -481,6 +481,35 @@ def _exec_totals(spark) -> dict | None:
         return None
 
 
+def force(df) -> int:
+    """Materialize every value of `df` and return its row count: one
+    1-row aggregate hashing every column (xxhash64 over string casts),
+    summed as a decimal — a long would overflow under ANSI mode. The
+    timing forcing of bench.py and of the measurement tools."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).cast("decimal(38,0)")
+        ).alias("h"),
+    ).collect()[0]
+    return row.n
+
+
+def warm_jvm(spark, sf_dir: str) -> None:
+    """Warm the JVM before timing: parquet footer reads, whole-stage
+    codegen compilation, one shuffle exchange and one broadcast —
+    otherwise the first measured query absorbs one-time startup cost
+    that is not query work."""
+    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    warm = spark.range(100_000).select(
+        (F.col("id") % 97).alias("k"), F.md5(F.col("id").cast("string")).alias("s")
+    )
+    warm.groupBy("k").agg(F.count("*"), F.sum(F.xxhash64("s").cast("decimal(38,0)"))).collect()
+    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).count()
+
+
 def _host_probe(spark) -> float:
     """Fixed engine-independent workload (range → hash → groupBy →
     sort): its wall-clock depends on the machine only, so the ratio to
@@ -613,18 +642,7 @@ def main() -> None:
     qs = entrymod.queries()
     names = [n for n in HEADLINE if n in qs] + [n for n in sys.argv[1:] if n in qs]
 
-    # Warm the JVM before timing: parquet footer reads, whole-stage
-    # codegen compilation, one shuffle exchange and one broadcast —
-    # otherwise the first measured query absorbs one-time startup cost
-    # that is not query work.
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    warm = spark.range(100_000).select(
-        (F.col("id") % 97).alias("k"), F.md5(F.col("id").cast("string")).alias("s")
-    )
-    warm.groupBy("k").agg(F.count("*"), F.sum(F.xxhash64("s").cast("decimal(38,0)"))).collect()
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).count()
+    warm_jvm(spark, sf_dir)
 
     # the host-calibration probe runs warmed, before the timed queries
     probe_sec = _host_probe(spark)
@@ -637,12 +655,7 @@ def main() -> None:
     # probe-normalized local run) and tripped the regression gate on a
     # measurement artifact, not a plan change.
     if names:
-        w = qs[names[0]](spark, sf_dir)
-        w.agg(
-            F.sum(
-                F.xxhash64(*[F.col(c).cast("string") for c in w.columns]).cast("decimal(38,0)")
-            )
-        ).collect()
+        force(qs[names[0]](spark, sf_dir))
         release_caches()
 
     # Streaming-machinery warmup (r11, guide §1: don't charge one-time
@@ -682,19 +695,12 @@ def main() -> None:
 
     def _time_query(name: str) -> tuple[float, int]:
         t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: long would overflow under ANSI mode
-            F.sum(
-                F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).cast("decimal(38,0)")
-            ).alias("h"),
-        ).collect()[0]
+        n_rows = force(qs[name](spark, sf_dir))
         sec = round(time.perf_counter() - t0, 3)
         # release query-scoped caches/checkpoints outside the timed
         # section — each query is measured cold, memory stays flat
         release_caches()
-        return sec, row.n
+        return sec, n_rows
 
     timings: dict[str, float] = {}
     # per-query deterministic counters (jobs/stages/tasks/shuffle

@@ -19,9 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from capstone_etl_spark.functions.hashing import md5_hash60
 from capstone_etl_spark.operators.dedup import (
     _JACCARD_PAIRS_CTE,
     _SHINGLES_CTE,
+    _both_ways,
     connected_components,
     jaccard_pairs,
 )
@@ -42,16 +44,20 @@ def corpus_pipeline(
     docs = load_table(spark, sf_dir, "documents")
     kept = docs.filter(F.col("n_chars") >= MIN_CHARS).select("doc_id", "lang", "n_chars", "text")
     pairs = jaccard_pairs(kept, sh=sh).select("doc_a", "doc_b").transform(cached)
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    return _keep_one(kept, pairs).select(
+        "doc_id", "lang", "n_chars", split_column(F.col("doc_id")).alias("split")
     )
-    labels = connected_components(edges)
-    comp = kept.join(labels, "doc_id", "left").select(
-        "doc_id", "lang", "n_chars", F.coalesce("label", "doc_id").alias("cluster_id")
-    )
+
+
+def _keep_one(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The rows of `docs` that survive near-dup keep-one: the (doc_a,
+    doc_b) pair edges → connected components, and a doc survives iff
+    it is its component's minimum id (docs in no pair survive)."""
+    labels = connected_components(_both_ways(pairs))
     return (
-        comp.filter(F.col("doc_id") == F.col("cluster_id"))
-        .select("doc_id", "lang", "n_chars", split_column(F.col("doc_id")).alias("split"))
+        docs.join(labels, "doc_id", "left")
+        .filter(F.col("doc_id") == F.coalesce("label", "doc_id"))
+        .drop("label")
     )
 
 
@@ -401,7 +407,8 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining admission steps a production corpus build ships:
 
         quality gate → near-dup keep-one → split assignment
-          (= corpus_pipeline)
+          (corpus_pipeline's steps, over the shared kept-scoped
+          shingles)
         → benchmark screen: the bench docs themselves leave (they're
           the eval set), and every survivor flagged by the
           decontamination pass (Jaccard OR containment over the
@@ -425,7 +432,6 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps over the full corpus, the dedup leg over the quality-kept
     subset — the cap domain is part of each leg's semantics, so only
     the caps re-run, never the tokenize→gram→hash→distinct pass)."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
     from capstone_etl_spark.functions.text import token_ngrams, tokenize
     from capstone_etl_spark.operators.dedup import (
         BENCH_MOD,
@@ -453,31 +459,47 @@ def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate self-join) — cached so the cap window runs once per leg
     kept_sh = cached(shingle_df_cap(uncapped.filter(F.col("kept")).select("doc_id", "sh")))
     full_sh = cached(shingle_df_cap(uncapped.select("doc_id", "sh")))
-    surv = corpus_pipeline(spark, sf_dir, sh=kept_sh)
+    kept = toks.filter(F.col("n_chars") >= MIN_CHARS)
+    pairs = jaccard_pairs(kept, sh=kept_sh).select("doc_a", "doc_b").transform(cached)
     contaminated = (
         benchmark_decontamination(spark, sf_dir, sh=full_sh)
         .select(F.col("train_doc").alias("doc_id"))
         .distinct()
     )
-    clean = (
-        surv.filter(F.col("doc_id") % BENCH_MOD != 0)
-        .join(contaminated, "doc_id", "left_anti")
-    )
-    ntok = toks.select("doc_id", F.size("toks").cast("long").alias("n_tokens"))
-    tagged = clean.join(ntok, "doc_id").select(
+    admitted = kept.filter(F.col("doc_id") % BENCH_MOD != 0).select(
         "doc_id",
-        "split",
-        "n_tokens",
-        (
-            md5_hash60(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
-            % N_SHARDS
-        ).cast("long").alias("shard_id"),
+        split_column(F.col("doc_id")).alias("split"),
+        shard_col().alias("shard_id"),
+        F.size("toks").cast("long").alias("n_tokens"),
     )
-    return tagged.groupBy("split", "shard_id").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        F.min("doc_id").cast("long").alias("min_doc_id"),
-        F.max("doc_id").cast("long").alias("max_doc_id"),
+    return manifest_release(admitted, pairs, contaminated)
+
+
+def shard_col() -> F.Column:
+    """The salted-hash training shard of a doc_id, in [0, N_SHARDS)."""
+    return (
+        md5_hash60(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))) % N_SHARDS
+    ).cast("long")
+
+
+def manifest_release(admitted: DataFrame, pairs: DataFrame, contaminated: DataFrame) -> DataFrame:
+    """The manifest tail shared by training_manifest and its streaming
+    twin: near-dup keep-one over the (doc_a, doc_b) pair edges (a bench
+    doc can be the keep-one and take its cluster with it, which is why
+    `pairs` spans the whole kept set while `admitted` holds only the
+    kept non-bench (doc_id, split, shard_id, n_tokens) rows), then the
+    `contaminated` doc_id anti-join, then the per-(split, shard)
+    rollup."""
+    return (
+        _keep_one(admitted, pairs)
+        .join(contaminated, "doc_id", "left_anti")
+        .groupBy("split", "shard_id")
+        .agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
+            F.min("doc_id").cast("long").alias("min_doc_id"),
+            F.max("doc_id").cast("long").alias("max_doc_id"),
+        )
     )
 
 

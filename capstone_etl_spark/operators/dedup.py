@@ -47,16 +47,12 @@ SIMHASH_MAX_HAMMING = 3
 _MINHASH_AB = minhash_params(MINHASH_K)
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 # --------------------------------------------------------------- exact
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash: keep the lowest doc_id per distinct
     text. Hash-groupBy — one shuffle on a uniform key."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5("text").alias("text_hash"))
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies"))
@@ -137,7 +133,7 @@ WITH toks AS (
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs over the full documents table (driver query)."""
-    return jaccard_pairs(_docs(spark, sf_dir))
+    return jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def jaccard_pairs(
@@ -340,7 +336,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pairs → connected components → representative selection; singleton
     docs are their own cluster. Completes the dedup family (pairs alone
     don't say WHICH copy to keep when dups chain A~B~C)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     # cached: the union below consumes the pair lineage twice (once per
     # edge direction), and each CC round walks the edge relation again
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").transform(cached)
@@ -413,7 +409,7 @@ def benchmark_decontamination(
     One shingle pass (cached) is split by set membership. Pass a
     precomputed full-corpus CAPPED shingle relation via `sh` to share
     the tokenize pass with sibling consumers (training_manifest)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     if sh is None:
         sh = shingles(docs).transform(cached)
     is_bench = F.col("doc_id") % BENCH_MOD == 0
@@ -428,18 +424,25 @@ def benchmark_decontamination(
         )
         .agg(F.count("*").alias("n_inter"))
     )
-    jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
-    cont = F.col("n_inter") / F.col("sz_b")
-    return (
+    return decontamination_verdict(
         inter.join(sizes.select(F.col("doc_id").alias("train_doc"), F.col("sz").alias("sz_c")), "train_doc")
         .join(sizes.select(F.col("doc_id").alias("bench_doc"), F.col("sz").alias("sz_b")), "bench_doc")
-        .filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD))
-        .select(
-            "train_doc",
-            "bench_doc",
-            F.round(jac, 6).alias("jaccard"),
-            F.round(cont, 6).alias("containment"),
-        )
+    )
+
+
+def decontamination_verdict(pairs: DataFrame) -> DataFrame:
+    """(train_doc, bench_doc, jaccard, containment) — the flag rule over
+    a (train_doc, bench_doc, n_inter, sz_c, sz_b) overlap relation,
+    shared by benchmark_decontamination and its streaming twin: Jaccard
+    ≥ JACCARD_THRESHOLD OR containment ≥ CONTAINMENT_THRESHOLD, both
+    compared raw and emitted rounded."""
+    jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
+    cont = F.col("n_inter") / F.col("sz_b")
+    return pairs.filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD)).select(
+        "train_doc",
+        "bench_doc",
+        F.round(jac, 6).alias("jaccard"),
+        F.round(cont, 6).alias("containment"),
     )
 
 
@@ -480,7 +483,7 @@ def decontamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries min/max offsets; no second pass over the text. The df-cap
     (distinct-doc frequency ≤ MAX_SHINGLE_DF) drops boilerplate grams
     before the join, same skew/volume control as the dedup family."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize("text").alias("toks"))
     n = SPAN_N
     grams = (
@@ -556,7 +559,7 @@ def gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune join candidates; here the document frequency IS the signal).
     Two shuffles: the df count on gram hash and the per-doc rollup —
     both uniform keys; the ratio is exact-int count division."""
-    sh = shingles(_docs(spark, sf_dir), max_df=None).transform(cached)
+    sh = shingles(load_table(spark, sf_dir, "documents"), max_df=None).transform(cached)
     df_counts = sh.groupBy("sh").agg(F.count("*").alias("gdf"))
     return (
         sh.join(df_counts, "sh")
@@ -614,7 +617,7 @@ def repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     one division of identical ints."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize("text").alias("toks"))
     grams = toks.select(
         "doc_id",
@@ -773,7 +776,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle sets only for candidate pairs (tiny vs corpus).
     Deterministic end-to-end ⇒ exact oracle parity, and at threshold
     0.5 with these params LSH recall on planted dups is effectively 1."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     # One shingle pass shared by the signature and verification stages
     # (the cache materializes on first action; both subtrees reuse it).
     sh = shingles(docs).transform(cached)
@@ -868,7 +871,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ 3 via block-LSH: split the
     48-bit hash into 4 blocks of 12; any pair within distance 3 shares
     ≥1 exact block (pigeonhole) ⇒ candidates = per-block equi-join."""
-    sh = simhash(_docs(spark, sf_dir)).transform(cached)
+    sh = simhash(load_table(spark, sf_dir, "documents")).transform(cached)
     blocks = sh.select(
         "doc_id",
         "simhash",
@@ -1009,7 +1012,7 @@ def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the matrix is |sources|²-bounded — map-side combine
     collapses partitions to that long before the final shuffle."""
     pairs = minhash_lsh_pairs(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     labeled = (
         pairs.join(
             docs.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("sa")), "doc_a"
@@ -1079,7 +1082,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     never |base|². Verdict assembly is two left joins on the
     delta-sized key. The delta membership is a pure doc_id expression
     (no join to tag rows)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     sh = shingles(docs).transform(cached)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.filter(_is_delta(F.col("doc_id"))).alias("a")
@@ -1094,6 +1097,16 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_inter"))
     )
+    return admission_verdict(docs, inter, sizes)
+
+
+def admission_verdict(docs: DataFrame, inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(doc_id, is_dup, dup_of, n_dups, best_jaccard) for every delta doc
+    of `docs` — the near-dup verdict assembly shared by dedup_incremental
+    and its streaming twin, over a (doc_a, doc_b, n_inter) candidate
+    overlap relation and the (doc_id, sz) capped shingle-set sizes:
+    Jaccard-threshold pairs, then the min-(doc_b, jaccard) struct per
+    arriving doc."""
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
@@ -1162,7 +1175,7 @@ def dedup_clusters_incremental(
     Reference parity: extends the §2 dedup family (SURVEY.md §2.7);
     the reference has no incremental form — at 100 TB the near-dup
     graph is maintained, not rebuilt (VERDICT r7, item 5)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").transform(cached)
     if base_labels is None:
         base_pairs = pairs.filter(
@@ -1258,7 +1271,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregation over the cluster-labeled relation, no windows."""
     clusters = dedup_clusters(spark, sf_dir).select("doc_id", "cluster_id", "n_members")
     sized = clusters.join(
-        _docs(spark, sf_dir).select("doc_id", "n_chars"), "doc_id"
+        load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"), "doc_id"
     )
     best = (
         sized.groupBy("cluster_id")
@@ -1316,7 +1329,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion doubles only the CANDIDATE-pair relation, nothing
     corpus-sized. Division happens once on identical int64 operands in
     both engines; the threshold compares the raw double."""
-    sh = shingles(_docs(spark, sf_dir)).transform(cached)
+    sh = shingles(load_table(spark, sf_dir, "documents")).transform(cached)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -1446,7 +1459,7 @@ def template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     128-bit) plus the ≤ 4·TEMPLATE_SHAPE_TOKENS-char shape string —
     shuffle rows never carry document bodies. One shuffle total, no
     joins, no windows, no Python."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", "source", template_shape("text").alias("template_shape"))
         .groupBy("template_shape")
@@ -1510,7 +1523,7 @@ def dedup_aware_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, size)-keyed aggregation; singletons ride through as
     cluster_size 1, weight 1.0."""
     clusters = dedup_clusters(spark, sf_dir).select("doc_id", "n_members")
-    src = _docs(spark, sf_dir).select("doc_id", "source")
+    src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     return (
         clusters.join(src, "doc_id")
         .groupBy("source", F.col("n_members").alias("cluster_size"))
@@ -1569,7 +1582,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, whatever the data looks like."""
     from capstone_etl_spark.operators.vocab import with_dense_ids
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize("text").alias("toks"))
     keyed = toks.select(
         "doc_id",
@@ -1691,7 +1704,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash join (the decontamination discipline); the split predicate is
     a per-row salted hash, so the two sides partition the SAME gram
     relation — one tokenize pass, cached, both consumers."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     g = shingles(docs, n=LEAK_N, max_df=MAX_SHINGLE_DF)
     from capstone_etl_spark.operators.sampling import split_column
 
@@ -1762,7 +1775,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline, 4^rounds plan growth otherwise) and the edge relation
     is cached once and re-scanned each round. Rounds are FIXED, so
     cost is LP_ROUNDS × (two joins + two aggregates) at any scale."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").transform(cached)
     edges = cached(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(

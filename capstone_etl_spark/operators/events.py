@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
 from capstone_etl_spark.functions.windows import bounded_window_key
+from capstone_etl_spark.operators.relational import _dsum
 from capstone_etl_spark.operators.vocab import with_dense_ids
 from capstone_etl_spark.sources.tables import load_table
 from capstone_etl_spark.session import cached
@@ -35,10 +36,6 @@ SESSION_GAP_SEC = 30 * 60
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
-
-
-def _dsum(col: Column) -> Column:
-    return F.sum(col.cast("decimal(18,2)")).cast("double")
 
 
 def tumbling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -45,10 +45,6 @@ MAGIC = {"image": "IMG0", "audio": "AUD0", "video": "VID0"}
 FRAME_BYTES = 1000
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 def with_binary_payload(docs: DataFrame) -> DataFrame:
     """(doc_id, media_type, payload binary) — deterministic opaque
     payload: 4-byte magic (by media type, cycled doc_id % 3) + the
@@ -70,7 +66,7 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
 def binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-level stats entirely in codegen: size, md5 fingerprint,
     magic-byte sniff, frame count arithmetic. No Python anywhere."""
-    b = with_binary_payload(_docs(spark, sf_dir))
+    b = with_binary_payload(load_table(spark, sf_dir, "documents"))
     return b.select(
         "doc_id",
         "media_type",
@@ -112,7 +108,7 @@ def media_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset arithmetic + substring, hashing is md5 — all whole-stage
     codegen, zero Python; one shuffle on media_type after the
     map-side distinct aggregation."""
-    b = with_binary_payload(_docs(spark, sf_dir))
+    b = with_binary_payload(load_table(spark, sf_dir, "documents"))
     nf = F.ceil(F.length("payload") / F.lit(FRAME_BYTES)).cast("int")
     # Frame fingerprint CONTRACT: md5 of the LOWER-HEX encoding of the
     # byte frame — not of the raw bytes — because DuckDB's hash
@@ -332,7 +328,7 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     height, duration_ms, n_bytes). Real image payloads (PNG/GIF/JPEG,
     or anything PIL reads when installed) get true dimensions; the
     gate's synthetic payloads take the oracle-mirrored fake path."""
-    b = with_binary_payload(_docs(spark, sf_dir))
+    b = with_binary_payload(load_table(spark, sf_dir, "documents"))
     return b.mapInPandas(extract_meta, META_SCHEMA)
 
 
@@ -376,7 +372,7 @@ def frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     FRAME_BYTES frames, emit per-frame fingerprints — the shape of a
     video frame-extraction stage (1 input row → N output rows inside
     one Arrow batch)."""
-    b = with_binary_payload(_docs(spark, sf_dir))
+    b = with_binary_payload(load_table(spark, sf_dir, "documents"))
     schema = "doc_id long, frame_idx long, frame_bytes long, frame_md5 string"
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -473,7 +469,7 @@ def media_resize(spark: SparkSession, sf_dir: str, real_pixels: bool = False) ->
             "media_resize(real_pixels=True) needs PIL installed; "
             "the default fingerprint path runs without it"
         )
-    b = with_binary_payload(_docs(spark, sf_dir)).filter(
+    b = with_binary_payload(load_table(spark, sf_dir, "documents")).filter(
         F.col("media_type") != "audio"
     )
     schema = (
@@ -607,7 +603,7 @@ def audio_resample(spark: SparkSession, sf_dir: str, real_samples: bool = False)
             "module (removed in Python 3.13); the default fingerprint "
             "path runs without it"
         )
-    b = with_binary_payload(_docs(spark, sf_dir)).filter(
+    b = with_binary_payload(load_table(spark, sf_dir, "documents")).filter(
         F.col("media_type") == "audio"
     )
     schema = (
@@ -688,7 +684,7 @@ def media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     two bounded aggs keyed on doc_id); the only pair work is the
     block-bucket equi-join — never all-pairs — and the verify is two
     xor+popcounts per candidate."""
-    b = with_binary_payload(_docs(spark, sf_dir)).filter(
+    b = with_binary_payload(load_table(spark, sf_dir, "documents")).filter(
         F.col("media_type") == "image"
     )
     hexed = b.select(
@@ -845,7 +841,7 @@ def multimodal_caption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (media_metadata's discipline)."""
     from capstone_etl_spark.functions.text import tokenize
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     meta = (
         with_binary_payload(docs)
         .filter(F.col("media_type") == "image")

@@ -67,16 +67,12 @@ pages AS (
 """
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 # ------------------------------------------------------------ wikibooks
 
 def wikibooks_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed per-page document (typed): hierarchy + counts +
     tokens array + norm in ONE relation (struct main.go:46-64)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     tf = term_frequencies(docs).transform(cached)
 
     pages = hier_ops.synthetic_doc_paths(docs)
@@ -179,7 +175,7 @@ LEFT JOIN tokarr t ON t.doc_id = d.doc_id
 def tokens_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inverted-index collection (typed): dense `_id` (O4), token,
     posting list array<struct<doc_id,qty>> (A6/J5, main.go:151-163)."""
-    tf = term_frequencies(_docs(spark, sf_dir)).transform(cached)
+    tf = term_frequencies(load_table(spark, sf_dir, "documents")).transform(cached)
     idx = index_ops.inverted_index(tf)
     vocab = vocabulary(tf)
     return (
@@ -222,7 +218,7 @@ def token_vector_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     map<string,long> `compressed_token_vector` (A8/F8, main.go:222-235)
     and the trimmed sorted index array `tokenrefs` (A9 — trailing-zero
     divergence §7.6.2)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     tf = term_frequencies(docs).transform(cached)
     sv = index_ops.sparse_vectors(tf, vocabulary(tf))
     dense = with_dense_ids(

@@ -189,16 +189,12 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ann_ivf_topk (the seeds travel as one broadcast array), then
     groupBy(cell).count() and a 1-row corpus total broadcast back for
     the share/cap columns. The output is ≈√N rows."""
-    from capstone_etl_spark.operators.similarity import quantize_fp, quantizer_seeds
+    from capstone_etl_spark.operators.similarity import _d2_fold, quantize_fp, quantizer_seeds
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     assign = (
         emb_q.join(F.broadcast(seeds), F.lit(True))
         .select("vec_id", "cell", d2_col.alias("d2"))
@@ -676,7 +672,6 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from capstone_etl_spark.operators.dedup import (
         LSH_BANDS,
         LSH_ROWS,
-        _docs,
         jaccard_pairs,
         lsh_band_candidates,
         minhash_signatures,
@@ -684,7 +679,7 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from capstone_etl_spark.session import cached
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     sh = cached(shingles(docs))
     sig = minhash_signatures(docs, sh=sh)
     cand = lsh_band_candidates(sig)
@@ -788,10 +783,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row at JACCARD_THRESHOLD equals the deployed pair count by
     construction (a 6dp-rounded compare could count a pair the
     production filter drops)."""
-    from capstone_etl_spark.operators.dedup import _docs, jaccard_pairs
+    from capstone_etl_spark.operators.dedup import jaccard_pairs
     from capstone_etl_spark.session import cached
 
-    pairs = jaccard_pairs(_docs(spark, sf_dir), threshold=0.0, with_raw=True)
+    pairs = jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.0, with_raw=True)
     grid = spark.range(1, SWEEP_STEPS + 1).select(
         (F.col("id").cast("double") / 10.0).alias("threshold")
     )

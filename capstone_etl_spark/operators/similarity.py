@@ -37,7 +37,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
@@ -301,19 +301,24 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan the corpus once, per-query heap via ranked window on the
     (tiny) scored relation. Ranking keys on the ROUNDED similarity so
     cross-engine last-ulp drift cannot reorder."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
-    scored = (
+    return topk_by_sim(
         F.broadcast(q)
         .crossJoin(n)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", F.round(qcosine("qe", "ne"), 6).alias("sim"))
     )
+
+
+def topk_by_sim(scored: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, sim, rnk) — the per-query TOP_K tail of
+    every cosine ANN index, batch and streaming alike: rank a scored
+    (query_id, neighbor_id, sim) candidate relation by (sim desc,
+    neighbor_id asc) and keep the first TOP_K."""
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -342,8 +347,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage ANN: LSH bucket equi-join prunes candidates, cosine
     reranks. Deterministic planes ⇒ the oracle reproduces the exact
     candidate set and ranking."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     buckets = lsh_buckets(emb).transform(cached)
     qb = buckets.filter(F.col("vec_id") < N_QUERIES).select(
@@ -363,16 +366,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
-    scored = (
+    return topk_by_sim(
         cand.join(F.broadcast(q), "query_id")
         .join(n, "neighbor_id")
         .select("query_id", "neighbor_id", F.round(qcosine("qe", "ne"), 6).alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
     )
 
 
@@ -654,6 +651,16 @@ GROUP BY b.label, b.vec_id
 # SHRINKS as the corpus grows instead of being pinned by a constant.
 IVF_PROBES_MIN = 3
 
+
+def _probe_k() -> F.Column:
+    """max(IVF_PROBES_MIN, ⌈√n_cells⌉) over a row carrying the index's
+    `n_cells` — the probe count every IVF query path derives in-plan."""
+    return F.greatest(
+        F.lit(IVF_PROBES_MIN).cast("long"),
+        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
+    )
+
+
 # Hash-sampled quantizer seeding (shared by ann_ivf_topk and
 # semantic_dedup). A vector seeds a Voronoi cell iff its portable
 # 60-bit hash falls below 2^60/√N, so the seed count — and therefore
@@ -727,15 +734,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vector, seed); the candidate join shuffles on cell; rerank cost =
     probed fraction of brute force. Recall vs brute force asserted in
     tests; per-cell population cap asserted in test_quantizer_scaling."""
-    from pyspark.sql import Window
-
-    scored = _ivf_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    return topk_by_sim(_ivf_scored(spark, sf_dir))
 
 
 def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,11 +748,7 @@ def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     # (vector, seed) exact integer distances — feeds BOTH the assignment
     # argmin and the query probe ranking below
     vec_seed_d2 = emb_q.join(F.broadcast(seeds), F.lit(True)).select(
@@ -768,15 +763,11 @@ def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table); the probe count enters as a 1-row broadcast seed count
     pw = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cell"))
     n_cells = seeds.agg(F.count("*").alias("n_cells"))
-    probe_k = F.greatest(
-        F.lit(IVF_PROBES_MIN).cast("long"),
-        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-    )
     probes = (
         vec_seed_d2.filter(F.col("vec_id") < N_QUERIES)
         .withColumn("prnk", F.row_number().over(pw))
         .join(F.broadcast(n_cells), F.lit(True))
-        .filter(F.col("prnk") <= probe_k)
+        .filter(F.col("prnk") <= _probe_k())
         .select(F.col("vec_id").alias("query_id"), "cell")
     )
     cand = (
@@ -885,7 +876,7 @@ SELECT query_id, neighbor_id, sim FROM scored WHERE sim >= {ANN_RADIUS_SIM}
 BRANCH_PROBES = 2
 
 
-def _d2_fold(a: str, b) -> F.Column:
+def _d2_fold(a: str | Column, b: str | Column) -> F.Column:
     """Exact integer squared distance between two quantized arrays."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
@@ -1012,11 +1003,13 @@ def hier_branch_cells_row(emb_q: DataFrame) -> DataFrame:
     )
 
 
-def hier_route_expr(n_branches: int = BRANCH_PROBES) -> F.Column:
+def hier_cand_expr() -> F.Column:
     """In-row routing over a hier_branch_cells_row artifact: the
     current row's `vq` against every branch in `bs`, sorted by
-    (bd2, branch), top n_branches kept with their cell lists."""
-    return F.slice(
+    (bd2, branch), the BRANCH_PROBES nearest kept, and their
+    second-level (cell, sq) seed lists flattened into one candidate
+    array."""
+    route = F.slice(
         F.array_sort(
             F.transform(
                 "bs",
@@ -1028,25 +1021,40 @@ def hier_route_expr(n_branches: int = BRANCH_PROBES) -> F.Column:
             )
         ),
         1,
-        n_branches,
+        BRANCH_PROBES,
+    )
+    return F.flatten(F.transform(route, lambda r: r["cells"]))
+
+
+def _seeds_by_d2(seeds: F.Column) -> F.Column:
+    """The current row's `vq` against every (cell, sq) struct of
+    `seeds`, as (d2, cell) structs sorted ascending — the batch
+    (d2, cell) argmin / probe-window order, evaluated in-row."""
+    return F.array_sort(
+        F.transform(
+            seeds,
+            lambda s: F.struct(_d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")),
+        )
     )
 
 
 def hier_best_cell_expr() -> F.Column:
-    """In-row argmin over a routed candidate-cell array `cand` (the
-    flattened cell lists of the routed branches) — reproduces
-    hier_assign's (d2, cell) tiebreak per row, no state."""
-    return F.element_at(
-        F.array_sort(
-            F.transform(
-                "cand",
-                lambda s: F.struct(
-                    _d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")
-                ),
-            )
-        ),
-        1,
-    )["cell"]
+    """In-row argmin over the routed candidate cells (hier_cand_expr)
+    — reproduces hier_assign's (d2, cell) tiebreak per row, no
+    state."""
+    return F.element_at(_seeds_by_d2(hier_cand_expr()), 1)["cell"]
+
+
+def inrow_probes(rows: DataFrame, seeds: F.Column, *keep: str) -> DataFrame:
+    """(*keep, cell) — one row per probed cell, chosen in-row: the
+    serving streams' stand-in for the batch probe window (windows do
+    not exist on streams). `rows` carries the query's `vq` and the
+    index's `n_cells`; `seeds` is its candidate (cell, sq) array. The
+    first _probe_k() cells in (d2, cell) order are the batch window's
+    exact probe set."""
+    return rows.select(
+        *keep, F.explode(F.slice(_seeds_by_d2(seeds), 1, _probe_k())).alias("p")
+    ).select(*keep, F.col("p.cell").alias("cell"))
 
 
 def hier_assign(emb_q: DataFrame) -> DataFrame:
@@ -1093,15 +1101,11 @@ def _hivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hierarchical narrowing applies to the query side too
     pw = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cell"))
     n_cells = seeds.agg(F.count("*").alias("n_cells"))
-    probe_k = F.greatest(
-        F.lit(IVF_PROBES_MIN).cast("long"),
-        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-    )
     probes = (
         cand_seed.filter(F.col("vec_id") < N_QUERIES)
         .withColumn("prnk", F.row_number().over(pw))
         .join(F.broadcast(n_cells), F.lit(True))
-        .filter(F.col("prnk") <= probe_k)
+        .filter(F.col("prnk") <= _probe_k())
         .select(F.col("vec_id").alias("query_id"), "cell")
     )
     cand = (
@@ -1130,15 +1134,7 @@ def ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     N^1.5 frontier (SCALE.md) paid down. Recall vs the flat index is
     pinned on a clustered fixture in tests (identical where cluster
     structure exists; boundary vectors may route differently)."""
-    from pyspark.sql import Window
-
-    scored = _hivf_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    return topk_by_sim(_hivf_scored(spark, sf_dir))
 
 
 # WITH-chain through the two-level assignment — shared by the
@@ -1261,11 +1257,7 @@ def hivf_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vq").alias("vqb"),
         )
     )
-    d2_pair = F.aggregate(
-        F.zip_with("vq", "vqb", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_pair = _d2_fold("vq", "vqb")
     tot = (
         assign.join(cands, F.col("cell") == F.col("cellc"))
         .select("cell", "vb", d2_pair.alias("d2"))
@@ -1450,8 +1442,6 @@ def bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     those 6dp values (float-sum order cannot drift), the margin is one
     IEEE division of identical doubles, and every argmax tiebreaks on
     (margin desc, sim desc, partner asc)."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     assign = cached(hier_assign(emb_q).select("vec_id", "cell"))
@@ -1462,7 +1452,16 @@ def bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = withe.filter(F.col("vec_id") % 2 == 1).select(
         F.col("vec_id").alias("tgt_id"), "cell", F.col("embedding").alias("ne")
     )
-    pairs = cached(_bitext_capped_pairs(a, b))
+    return bitext_release(cached(_bitext_capped_pairs(a, b)))
+
+
+def bitext_release(pairs: DataFrame) -> DataFrame:
+    """(src_id, tgt_id, sim, margin) — the miner's verdict assembly over
+    a (src_id, tgt_id, sim) candidate relation, shared by bitext_mining
+    and its streaming twin: top-BITEXT_K endpoint means, ratio margin,
+    threshold, then mutual margin argmax. `pairs` is referenced three
+    times (both means and the score join), so pass a cached or
+    truncated relation."""
     wx = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("tgt_id"))
     wy = Window.partitionBy("tgt_id").orderBy(F.desc("sim"), F.asc("src_id"))
     dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
@@ -1569,11 +1568,7 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     vec_seed_d2 = emb_q.join(F.broadcast(seeds), F.lit(True)).select(
         "vec_id", "cell", d2_col.alias("d2")
     )
@@ -1773,11 +1768,7 @@ def _pq_subspace_dists(emb_q: DataFrame, seeds: DataFrame) -> DataFrame:
             F.array(*[F.slice("sq", m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)])
         ).alias("m", "ssub"),
     )
-    d2 = F.aggregate(
-        F.zip_with("sub", "ssub", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2 = _d2_fold("sub", "ssub")
     return vec_sub.join(F.broadcast(seed_sub), "m").select(
         "vec_id", "m", "cell", d2.alias("d2")
     )
@@ -2173,12 +2164,18 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qtab = dists.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "m", "cell", F.col("d2").alias("qd2")
     )
-    adc = (
+    return topk_by_adc(
         codes.join(F.broadcast(qtab), ["m", "cell"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qd2").alias("adc"))
     )
+
+
+def topk_by_adc(terms: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, adc_dist, rnk) — the PQ indexes' shared
+    tail, batch and streaming: Σ_m of the exact integer per-subspace
+    (query_id, neighbor_id, qd2) ADC terms, the TOP_K smallest per
+    query (neighbor_id tiebreak), and the distance rescaled once."""
+    adc = terms.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
     w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
     return (
         adc.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -2267,16 +2264,12 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("a.cell").alias("cell"))
     )
     n_cells = seeds.agg(F.count("*").alias("n_cells"))
-    probe_k = F.greatest(
-        F.lit(IVF_PROBES_MIN).cast("long"),
-        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-    )
     pw = Window.partitionBy("vec_id").orderBy(F.asc("d2f"), F.asc("cell"))
     probes = (
         full.filter(F.col("vec_id") < N_QUERIES)
         .withColumn("prnk", F.row_number().over(pw))
         .join(F.broadcast(n_cells), F.lit(True))
-        .filter(F.col("prnk") <= probe_k)
+        .filter(F.col("prnk") <= _probe_k())
         .select(F.col("vec_id").alias("query_id"), "cell")
     )
     # fine: PQ codes for the corpus, ADC tables for the queries
@@ -2293,24 +2286,9 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
     )
-    adc = (
+    return topk_by_adc(
         cand.join(codes, "neighbor_id")
         .join(F.broadcast(qtab), ["query_id", "m", "cw"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qd2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)), 6
-            ).alias("adc_dist"),
-            "rnk",
-        )
     )
 
 
@@ -2409,16 +2387,12 @@ def ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("a.cell").alias("cell"))
     )
     n_cells = seeds.agg(F.count("*").alias("n_cells"))
-    probe_k = F.greatest(
-        F.lit(IVF_PROBES_MIN).cast("long"),
-        F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-    )
     pw = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cell"))
     probes = (
         cand_seed.filter(F.col("vec_id") < N_QUERIES)
         .withColumn("prnk", F.row_number().over(pw))
         .join(F.broadcast(n_cells), F.lit(True))
-        .filter(F.col("prnk") <= probe_k)
+        .filter(F.col("prnk") <= _probe_k())
         .select(F.col("vec_id").alias("query_id"), "cell")
     )
     codes = _pq_hier_codes(emb_q).select(
@@ -2435,24 +2409,9 @@ def ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
     )
-    adc = (
+    return topk_by_adc(
         cand.join(codes, "neighbor_id")
         .join(F.broadcast(qtab), ["query_id", "m", "cw"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qd2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)), 6
-            ).alias("adc_dist"),
-            "rnk",
-        )
     )
 
 
@@ -2790,11 +2749,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_col = _d2_fold("vq", "sq")
     assign = (
         emb_q.join(F.broadcast(seeds), F.lit(True))
         .select("vec_id", "cell", d2_col.alias("d2"))
@@ -3748,11 +3703,7 @@ def ivf_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_seed = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_seed = _d2_fold("vq", "sq")
     assign = cached(
         emb_q.join(F.broadcast(seeds), F.lit(True))
         .select("vec_id", "vq", "cell", d2_seed.alias("d2"))
@@ -3760,11 +3711,7 @@ def ivf_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("d2", "cell", "vq")).alias("m"))
         .select("vec_id", F.col("m.cell").alias("cell"), F.col("m.vq").alias("vq"))
     )
-    d2_pair = F.aggregate(
-        F.zip_with("vqa", "vqb", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2_pair = _d2_fold("vqa", "vqb")
     tot = (
         assign.select("cell", F.col("vec_id").alias("va"), F.col("vq").alias("vqa"))
         .join(

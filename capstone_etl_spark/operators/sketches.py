@@ -1077,8 +1077,6 @@ def kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the ≤K-row sample or the bounded distinct-value domain, and
     the sketch merges across shards/streams by union — never a global
     sort of the data."""
-    from pyspark.sql import Window  # noqa: F401  (used by the shared tail)
-
     docs = load_table(spark, sf_dir, "documents")
     vals = _kll_vals(docs)
     stats = _kll_stats(vals)
@@ -1105,7 +1103,8 @@ def _kll_release(vals: DataFrame, stats: DataFrame, samp: DataFrame) -> DataFram
     """The sketch's release tail (cumulative weights → ⌈q·n⌉ rank cut →
     shortfall fallback → exact-quantile audit) over any (source, v, c)
     survivor relation — shared by the monolithic sketch, the shard
-    merge, and reused in shape by the streaming twin."""
+    merge and the streaming twin. `stats` is the (source, n, L, w)
+    relation whose n feeds the ⌈q·n⌉ rank cut."""
     from pyspark.sql import Window
 
     wv = Window.partitionBy("source").orderBy("v").rowsBetween(

@@ -11,6 +11,13 @@ state is genuinely exercised), the query's stream transform drains to
 the memory sink, and the staging and checkpoint directories are
 deleted. A query is therefore only its stream transform plus the batch
 tail it shares with its batch twin.
+
+That tail is defined once, in the batch module, and called by both
+twins (quality.dro_release, dedup.admission_verdict,
+similarity.bitext_release, corpus.manifest_release,
+sketches._kll_release, valuation.noise_release, ...); the stream side
+never re-types it. Oracles are the batch modules' SQL constants,
+named directly in ORACLE_SQL.
 """
 
 from __future__ import annotations
@@ -22,15 +29,142 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from capstone_etl_spark.operators.privacy import DP_SOURCE_HISTOGRAM_SQL, PII_SCAN_SQL
+from capstone_etl_spark.functions.hashing import md5_hash60, md5_hash60_sql
+from capstone_etl_spark.functions.text import token_ngrams, tokenize
+from capstone_etl_spark.functions.vectors import dot_long, quantized_cosine
+from capstone_etl_spark.operators.corpus import (
+    MIN_CHARS,
+    _training_manifest_sql,
+    manifest_release,
+    shard_col,
+)
+from capstone_etl_spark.operators.dedup import (
+    BENCH_MOD,
+    CONTAINMENT_THRESHOLD,
+    DECONTAMINATION_SQL,
+    DEDUP_INCREMENTAL_SQL,
+    JACCARD_THRESHOLD,
+    NGRAM_N,
+    TEMPLATE_EXTRACTION_SQL,
+    TEMPLATE_MIN_DOCS,
+    _is_delta,
+    admission_verdict,
+    decontamination_verdict,
+    shingle_df_cap,
+    shingles,
+    template_shape,
+)
 from capstone_etl_spark.operators.events import (
+    AB_CONVERT_TYPE,
+    AB_EXPOSE_TYPE,
     AB_TEST_ANALYSIS_SQL,
     CHANGELOG_APPLY_SQL,
     CONVERSION_SURVIVAL_SQL,
     EVENT_DEDUP_SQL,
     EVENT_PSI_DRIFT_SQL,
+    KM_BUCKET_US,
+    PSI_BINS,
+    RFM_SEGMENTS_SQL,
     SLIDING_WINDOWS_SQL,
     TUMBLING_WINDOWS_SQL,
+    _cuped_sql,
+    ab_readout,
+    ab_variant_col,
+    changelog_snapshot,
+    changelog_state,
+    cuped_release,
+    km_curve,
+    psi_release,
+    rfm_release,
+)
+from capstone_etl_spark.operators.privacy import (
+    DP_SOURCE_HISTOGRAM_SQL,
+    PII_EMAIL,
+    PII_ID,
+    PII_IPV4,
+    PII_PHONE,
+    PII_SCAN_SQL,
+    _count,
+    dp_release,
+)
+from capstone_etl_spark.operators.quality import (
+    GROUP_DRO_WEIGHTS_SQL,
+    PARETO_FRONTIER_DOCS_SQL,
+    QUALITY_FILTER_FUNNEL_SQL,
+    _pareto_toks,
+    _rule_flags,
+    dro_release,
+    funnel_agg,
+    funnel_unpack,
+    pareto_release,
+)
+from capstone_etl_spark.operators.sampling import (
+    RESERVOIR_SALT,
+    RESERVOIR_SAMPLE_SQL,
+    split_column,
+)
+from capstone_etl_spark.operators.scaleaudit import (
+    _cell_balance_tail,
+    _hivf_cell_balance_sql,
+    _ivf_cell_balance_sql,
+)
+from capstone_etl_spark.operators.similarity import (
+    ANN_HIVF_PQ_TOPK_SQL,
+    ANN_HIVF_TOPK_SQL,
+    ANN_IVF_TOPK_SQL,
+    BITEXT_MINING_SQL,
+    N_QUERIES,
+    PQ_M,
+    PQ_SUBDIM,
+    SEMANTIC_DEDUP_HIER_SQL,
+    SEMDEDUP_THRESHOLD,
+    _bitext_capped_pairs,
+    _d2_fold,
+    _hier_cand_seed,
+    _pq_hier_codes,
+    bitext_release,
+    hier_assign,
+    hier_best_cell_expr,
+    hier_branch_cells_row,
+    hier_cand_expr,
+    inrow_probes,
+    qcosine,
+    quantize_fp,
+    quantizer_seeds,
+    topk_by_adc,
+    topk_by_sim,
+)
+from capstone_etl_spark.operators.sketches import (
+    CM_D,
+    CM_W,
+    HASH_SPACE,
+    HLL_DISTINCT_SKETCH_SQL,
+    KLL_QUANTILE_SKETCH_SQL,
+    KMV_K,
+    _cm_bucket_sql,
+    _kll_release,
+    _kll_stats,
+    _kll_vals,
+    hll_finalize,
+    hll_rho_rows,
+)
+from capstone_etl_spark.operators.sketches import NGRAM_N as SKETCH_NGRAM_N
+from capstone_etl_spark.operators.textstats import (
+    KS_SOURCE_DRIFT_SQL,
+    NAIVE_BAYES_SOURCE_MODEL_SQL,
+    ks_release,
+    nb_release,
+)
+from capstone_etl_spark.operators.valuation import (
+    CORESET_COVERAGE_AUDIT_SQL,
+    EMBEDDING_SHIFT_AUDIT_SQL,
+    LABEL_NOISE_INCREMENTAL_SQL,
+    _kcenter_select,
+    coverage_cells,
+    coverage_release,
+    noise_release,
+    noise_tally,
+    shift_release,
 )
 from capstone_etl_spark.session import cached, checkpoint_truncate
 from capstone_etl_spark.sources.tables import load_table
@@ -43,11 +177,15 @@ from capstone_etl_spark.streaming import (
     stream_sliding,
     stream_tumbling,
 )
+from capstone_etl_spark.streaming.stateful import (
+    kmv_bottom_k,
+    reservoir_bottom_k,
+    running_user_activity,
+)
 from capstone_etl_spark.streaming.windows import (
     ATTRIBUTION_WINDOW_SEC,
     stream_enrich_user_tier,
 )
-from capstone_etl_spark.streaming.stateful import running_user_activity
 
 SESSION_GAP_SEC = 30 * 60
 
@@ -305,18 +443,10 @@ def stream_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch. Same oracle as the batch funnel — the streaming engine must
     reproduce it exactly. This is the ingest-gate deployment shape: new
     corpus shards stream in, the funnel audit updates per micro-batch."""
-    from capstone_etl_spark.operators.quality import _rule_flags, funnel_agg, funnel_unpack
-
     one = _run(
         spark, sf_dir, lambda s, _: funnel_agg(_rule_flags(s)), "complete", table="documents"
     )
     return funnel_unpack(one)
-
-
-def _stream_quality_funnel_sql() -> str:
-    from capstone_etl_spark.operators.quality import QUALITY_FILTER_FUNNEL_SQL
-
-    return QUALITY_FILTER_FUNNEL_SQL
 
 
 def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,16 +462,11 @@ def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Update-mode emissions carry a per-key update counter; the final row
     per source is selected by struct-max on it (stream_user_activity's
     device)."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
-    from capstone_etl_spark.operators.sketches import NGRAM_N
-    from capstone_etl_spark.streaming.stateful import kmv_bottom_k
-
     def transform(stream, _):
         toks = stream.select("source", tokenize("text").alias("toks"))
         hashes = toks.select(
             "source",
-            F.explode(token_ngrams("toks", NGRAM_N)).alias("g"),
+            F.explode(token_ngrams("toks", SKETCH_NGRAM_N)).alias("g"),
         ).select("source", md5_hash60(F.col("g")).alias("h"))
         return kmv_bottom_k(hashes)
 
@@ -356,9 +481,6 @@ def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_kmv_sketch_sql() -> str:
-    from capstone_etl_spark.operators.sketches import HASH_SPACE, KMV_K, NGRAM_N
-    from capstone_etl_spark.functions.hashing import md5_hash60_sql
-
     return f"""
 WITH toks AS (
   SELECT source,
@@ -366,9 +488,9 @@ WITH toks AS (
                      t -> t <> '') AS t
   FROM documents
 ), grams AS (
-  SELECT source, array_to_string(t[i : i + {NGRAM_N} - 1], ' ') AS shingle
-  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {NGRAM_N} + 2)) AS i) r
-  WHERE len(t) >= {NGRAM_N}
+  SELECT source, array_to_string(t[i : i + {SKETCH_NGRAM_N} - 1], ' ') AS shingle
+  FROM toks, LATERAL (SELECT unnest(range(1, len(t) - {SKETCH_NGRAM_N} + 2)) AS i) r
+  WHERE len(t) >= {SKETCH_NGRAM_N}
 ), hashed AS (
   SELECT DISTINCT source, {md5_hash60_sql('shingle')} AS h FROM grams
 ), ranked AS (
@@ -397,10 +519,6 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     under reruns' becomes 'the sample is independent of
     micro-batching'. Final snapshot per source selected by the
     update-counter max (stream_user_activity's device)."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.operators.sampling import RESERVOIR_SALT
-    from capstone_etl_spark.streaming.stateful import reservoir_bottom_k
-
     def transform(stream, _):
         rows = stream.select(
             "source",
@@ -423,12 +541,6 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_reservoir_sample_sql() -> str:
-    from capstone_etl_spark.operators.sampling import RESERVOIR_SAMPLE_SQL
-
-    return RESERVOIR_SAMPLE_SQL
-
-
 def stream_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mixing-weight accounting as a STREAMING job: per-source doc
     count, token mass and char mass accumulate incrementally over the
@@ -442,8 +554,6 @@ def stream_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     source_mixing_weights (same √ snap to DECIMAL(28,10), same one
     double division), and the oracle is the batch SQL minus the
     dup-rate column — the streaming engine must reproduce it exactly."""
-    from capstone_etl_spark.functions.text import tokenize
-
     ws = F.size(tokenize("text")).cast("long")
     snap = _run(
         spark,
@@ -494,10 +604,6 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sketch EXACTLY and shares its oracle arithmetic. Complete-
     mode aggregation on (d, bucket): |state| = CM_D·CM_W keys no
     matter how many shards stream in."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.sketches import CM_D, CM_W
-
     buckets = F.array(
         *[
             F.struct(
@@ -519,8 +625,6 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_count_min_sql() -> str:
-    from capstone_etl_spark.operators.sketches import CM_D, _cm_bucket_sql
-
     per_d = " UNION ALL ".join(
         f"SELECT {d} AS d, {_cm_bucket_sql(d)} AS bucket FROM tok" for d in range(CM_D)
     )
@@ -556,16 +660,6 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train doc's groups = its matched allowed-shingle count. One
     streaming aggregation, state bounded by cross-cut candidate pairs
     (+ one NULL-bench row per train doc)."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
-    from capstone_etl_spark.operators.dedup import (
-        BENCH_MOD,
-        CONTAINMENT_THRESHOLD,
-        JACCARD_THRESHOLD,
-        NGRAM_N,
-        shingles,
-    )
-
     sh = shingles(load_table(spark, sf_dir, "documents"))
     bench = sh.filter(F.col("doc_id") % BENCH_MOD == 0).select(
         "sh", F.col("doc_id").alias("bench_doc")
@@ -608,25 +702,9 @@ def stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_sz = got.withColumn(
         "sz_c", F.sum("n_first").over(Window.partitionBy("train_doc"))
     )
-    jac = F.col("n_inter") / (F.col("sz_c") + F.col("sz_b") - F.col("n_inter"))
-    cont = F.col("n_inter") / F.col("sz_b")
-    return (
-        with_sz.filter(F.col("bench_doc").isNotNull())
-        .join(sz_b, "bench_doc")
-        .filter((jac >= JACCARD_THRESHOLD) | (cont >= CONTAINMENT_THRESHOLD))
-        .select(
-            "train_doc",
-            "bench_doc",
-            F.round(jac, 6).alias("jaccard"),
-            F.round(cont, 6).alias("containment"),
-        )
+    return decontamination_verdict(
+        with_sz.filter(F.col("bench_doc").isNotNull()).join(sz_b, "bench_doc")
     )
-
-
-def _stream_decontamination_sql() -> str:
-    from capstone_etl_spark.operators.dedup import DECONTAMINATION_SQL
-
-    return DECONTAMINATION_SQL
 
 
 def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,14 +716,6 @@ def stream_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shared oracle). Complete-mode agg, no event time → no watermark;
     this is the scrub-audit a 100 TB ingest runs while shards land,
     before anything downstream touches the text."""
-    from capstone_etl_spark.operators.privacy import (
-        PII_EMAIL,
-        PII_ID,
-        PII_IPV4,
-        PII_PHONE,
-        _count,
-    )
-
     def transform(stream, _):
         t = F.col("text")
         per_doc = stream.select(
@@ -679,11 +749,6 @@ def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by |sources|) and collapses to n_sources in the final
     batch projection — the drained result must equal the batch miner
     row-for-row (same oracle)."""
-    from capstone_etl_spark.operators.dedup import (
-        TEMPLATE_MIN_DOCS,
-        template_shape,
-    )
-
     def transform(stream, _):
         return (
             stream.select(
@@ -710,12 +775,6 @@ def stream_template_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_template_extraction_sql() -> str:
-    from capstone_etl_spark.operators.dedup import TEMPLATE_EXTRACTION_SQL
-
-    return TEMPLATE_EXTRACTION_SQL
-
-
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup ADMISSION at INGEST — dedup.dedup_incremental's
     delta-vs-base verdicts as a stream, the shape a 100 TB pipeline
@@ -735,15 +794,6 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch n_inter; both partner sizes come from the static size table
     at verdict time. State is bounded by cross-delta candidate pairs
     (df-capped), never |base|²."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
-    from capstone_etl_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        NGRAM_N,
-        _is_delta,
-        shingles,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     sh = _stream_static(shingles(docs))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
@@ -769,39 +819,8 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_inter"))
         )
 
-    pairs_raw = _run(spark, sf_dir, transform, "complete", table="documents")
-
-    # batch verdict assembly over the drained pair table
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
-    pairs = (
-        pairs_raw.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
-    best = pairs.groupBy("doc_a").agg(
-        F.min(F.struct("doc_b", "jaccard")).alias("m"),
-        F.count("*").cast("long").alias("n_dups"),
-    )
-    delta_docs = docs.select("doc_id").filter(_is_delta(F.col("doc_id")))
-    return (
-        delta_docs.join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("m").isNotNull().alias("is_dup"),
-            F.coalesce(F.col("m.doc_b"), F.col("doc_id")).alias("dup_of"),
-            F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
-            F.coalesce(F.col("m.jaccard"), F.lit(0.0)).alias("best_jaccard"),
-        )
-    )
-
-
-def _stream_dedup_incremental_sql() -> str:
-    from capstone_etl_spark.operators.dedup import DEDUP_INCREMENTAL_SQL
-
-    return DEDUP_INCREMENTAL_SQL
+    inter = _run(spark, sf_dir, transform, "complete", table="documents")
+    return admission_verdict(docs, inter, sizes)
 
 
 def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -824,39 +843,43 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the TOP_K ranking runs on the drained candidate table (bounded by
     queries × probed cells' population). Oracle: the batch
     ANN_IVF_TOPK_SQL verbatim."""
-    from capstone_etl_spark.operators.similarity import qcosine
-    from capstone_etl_spark.operators.similarity import (
-        IVF_PROBES_MIN,
-        N_QUERIES,
-        TOP_K,
-        quantize_fp,
-        quantizer_seeds,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
+    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     seeds = quantizer_seeds(emb_q)
-    d2_col = F.aggregate(
-        F.zip_with("vq", "sq", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     assign = _stream_static(
         emb_q.join(F.broadcast(seeds), F.lit(True))
-        .select("vec_id", "cell", d2_col.alias("d2"))
+        .select("vec_id", "cell", _d2_fold("vq", "sq").alias("d2"))
         .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "cell")).alias("m"))
         .select(F.col("vec_id").alias("neighbor_id"), F.col("m.cell").alias("cell"))
-    )
-    neigh = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
     )
     seed_row = _stream_static(
         seeds.agg(
             F.collect_list(F.struct("cell", "sq")).alias("seeds"),
             F.count("*").alias("n_cells"),
         )
+    )
+    return _serve_topk(spark, sf_dir, emb, assign, seed_row, F.col("seeds"))
+
+
+def _serve_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    emb: DataFrame,
+    assign: DataFrame,
+    index_row: DataFrame,
+    seeds,
+) -> DataFrame:
+    """The serving streams' shared query path: each arriving query
+    vector joins the static 1-row `index_row` (its `n_cells` plus the
+    columns `seeds` reads: the flat seed list, or the branch array the
+    hier router walks), picks its probe cells in-row
+    (similarity.inrow_probes), joins the static (neighbor_id, cell)
+    `assign`ment and scores exact cosines into the append sink; the
+    drained candidates take the batch TOP_K tail."""
+    quant = quantize_fp()
+    neigh = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
     )
 
     def transform(stream, _):
@@ -865,35 +888,8 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qe"),
             quant.alias("vq"),
         )
-        dists = F.array_sort(
-            F.transform(
-                "seeds",
-                lambda s: F.struct(
-                    F.aggregate(
-                        F.zip_with("vq", s["sq"], lambda x, y: (x - y) * (x - y)),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
-                    ).alias("d2"),
-                    s["cell"].alias("cell"),
-                ),
-            )
-        )
-        probes = (
-            arriving.join(F.broadcast(seed_row), F.lit(True))
-            .withColumn(
-                "pk",
-                F.greatest(
-                    F.lit(IVF_PROBES_MIN).cast("long"),
-                    F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-                ),
-            )
-            .withColumn("ds", dists)
-            .select(
-                "query_id",
-                "qe",
-                F.explode(F.expr("slice(ds, 1, pk)")).alias("p"),
-            )
-            .select("query_id", "qe", F.col("p.cell").alias("cell"))
+        probes = inrow_probes(
+            arriving.join(F.broadcast(index_row), F.lit(True)), seeds, "query_id", "qe"
         )
         return (
             probes.join(assign, "cell")
@@ -906,19 +902,7 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    got = _run(spark, sf_dir, transform, "append", table="embeddings")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        got.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
-
-
-def _stream_ann_topk_sql() -> str:
-    from capstone_etl_spark.operators.similarity import ANN_IVF_TOPK_SQL
-
-    return ANN_IVF_TOPK_SQL
+    return topk_by_sim(_run(spark, sf_dir, transform, "append", table="embeddings"))
 
 
 def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -936,95 +920,19 @@ def stream_ann_hivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed folds to ≈N^(1/4) + B·N^(1/4) — the same asymptotic win the
     batch index measured (SCALE.md). Oracle: ANN_HIVF_TOPK_SQL
     verbatim."""
-    from capstone_etl_spark.operators.similarity import qcosine
-    from capstone_etl_spark.operators.similarity import (
-        IVF_PROBES_MIN,
-        N_QUERIES,
-        TOP_K,
-        _d2_fold,
-        hier_assign,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-        quantizer_seeds,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    quant = quantize_fp()
-    emb_q = emb.select("vec_id", quant.alias("vq"))
+    emb_q = emb.select("vec_id", quantize_fp().alias("vq"))
     assign = _stream_static(
         hier_assign(emb_q).select(
             F.col("vec_id").alias("neighbor_id"), "cell"
         )
-    )
-    neigh = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
     )
     # branch → second-level seed list, one nested 1-row broadcast
     n_cells_row = quantizer_seeds(emb_q).agg(F.count("*").alias("n_cells"))
     brow = _stream_static(
         hier_branch_cells_row(emb_q).join(F.broadcast(n_cells_row), F.lit(True))
     )
-
-    def transform(stream, _):
-        arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            quant.alias("vq"),
-        )
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        ds = F.array_sort(
-            F.transform(
-                "cand",
-                lambda s: F.struct(
-                    _d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")
-                ),
-            )
-        )
-        probes = (
-            arriving.join(F.broadcast(brow), F.lit(True))
-            .withColumn(
-                "pk",
-                F.greatest(
-                    F.lit(IVF_PROBES_MIN).cast("long"),
-                    F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-                ),
-            )
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
-            .withColumn("ds", ds)
-            .select(
-                "query_id",
-                "qe",
-                F.explode(F.expr("slice(ds, 1, pk)")).alias("p"),
-            )
-            .select("query_id", "qe", F.col("p.cell").alias("cell"))
-        )
-        return (
-            probes.join(assign, "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .join(neigh, "neighbor_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(qcosine("qe", "ne"), 6).alias("sim"),
-            )
-        )
-
-    got = _run(spark, sf_dir, transform, "append", table="embeddings")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        got.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
-
-
-def _stream_ann_hivf_topk_sql() -> str:
-    from capstone_etl_spark.operators.similarity import ANN_HIVF_TOPK_SQL
-
-    return ANN_HIVF_TOPK_SQL
+    return _serve_topk(spark, sf_dir, emb, assign, brow, hier_cand_expr())
 
 
 def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1047,22 +955,6 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured (decade-2 exponent 0.95 vs the flat 1.24, SCALE.md); the
     sink holds candidate×M bounded rows, and re-delivery cannot
     corrupt anything because nothing aggregates in-stream."""
-    from capstone_etl_spark.operators.similarity import (
-        CENTROID_SCALE,
-        IVF_PROBES_MIN,
-        N_QUERIES,
-        PQ_M,
-        PQ_SUBDIM,
-        TOP_K,
-        _d2_fold,
-        _pq_hier_codes,
-        hier_assign,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-        quantizer_seeds,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
@@ -1095,34 +987,8 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         arriving = stream.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), quant.alias("vq")
         )
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        ds = F.array_sort(
-            F.transform(
-                "cand",
-                lambda s: F.struct(
-                    _d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")
-                ),
-            )
-        )
-        probes = (
-            arriving.join(F.broadcast(brow), F.lit(True))
-            .withColumn(
-                "pk",
-                F.greatest(
-                    F.lit(IVF_PROBES_MIN).cast("long"),
-                    F.ceil(F.sqrt(F.col("n_cells").cast("double"))),
-                ),
-            )
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
-            .withColumn("ds", ds)
-            .select(
-                "query_id",
-                "vq",
-                F.explode(F.expr("slice(ds, 1, pk)")).alias("p"),
-            )
-            .select("query_id", "vq", F.col("p.cell").alias("cell"))
+        probes = inrow_probes(
+            arriving.join(F.broadcast(brow), F.lit(True)), hier_cand_expr(), "query_id", "vq"
         )
         qsub = F.slice("vq", F.col("m") * PQ_SUBDIM + 1, PQ_SUBDIM)
         return (
@@ -1133,36 +999,11 @@ def stream_ann_hivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id",
                 "neighbor_id",
                 "m",
-                F.aggregate(
-                    F.zip_with(qsub, F.col("ssub"), lambda x, y: (x - y) * (x - y)),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("qd2"),
+                _d2_fold(qsub, F.col("ssub")).alias("qd2"),
             )
         )
 
-    got = _run(spark, sf_dir, transform, "append", table="embeddings")
-    adc = got.groupBy("query_id", "neighbor_id").agg(F.sum("qd2").alias("adc"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.sqrt(F.col("adc").cast("double")) / F.lit(float(CENTROID_SCALE)),
-                6,
-            ).alias("adc_dist"),
-            "rnk",
-        )
-    )
-
-
-def _stream_ann_hivf_pq_topk_sql() -> str:
-    from capstone_etl_spark.operators.similarity import ANN_HIVF_PQ_TOPK_SQL
-
-    return ANN_HIVF_PQ_TOPK_SQL
+    return topk_by_adc(_run(spark, sf_dir, transform, "append", table="embeddings"))
 
 
 def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1179,17 +1020,6 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual-argmax verdict assembly runs the batch code on it and the
     mined set equals the batch miner row-for-row. Oracle:
     BITEXT_MINING_SQL verbatim."""
-    from capstone_etl_spark.operators.similarity import (
-        BITEXT_K,
-        BITEXT_MARGIN,
-        _bitext_capped_pairs,
-        hier_assign,
-        hier_best_cell_expr,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
@@ -1207,9 +1037,6 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qe"),
             quant.alias("vq"),
         )
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
-        best_cell = hier_best_cell_expr()
         # r11: each arriving source emits only its top-BITEXT_C
         # within-cell cosines (_bitext_capped_pairs — in-row scoring
         # against the static per-cell target arrays), so the memory
@@ -1217,63 +1044,17 @@ def stream_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         # FULL within-cell pair relation (≈N^1.5 rows) and measured
         # decade-2 exponent 1.41 at sf10 — the sink volume, not the
         # mining, was the scale wall.
-        routed = (
-            arriving.join(F.broadcast(brow), F.lit(True))
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
-            .select("src_id", "qe", best_cell.alias("cell"))
+        routed = arriving.join(F.broadcast(brow), F.lit(True)).select(
+            "src_id", "qe", hier_best_cell_expr().alias("cell")
         )
         return _bitext_capped_pairs(routed, tgt)
 
     # truncate the sink lineage: the assembly joins the pair table
     # with its own per-endpoint aggregates (the sink-self-join
     # conflicting-reference class)
-    pairs = checkpoint_truncate(
-        _run(spark, sf_dir, transform, "append", table="embeddings")
+    return bitext_release(
+        checkpoint_truncate(_run(spark, sf_dir, transform, "append", table="embeddings"))
     )
-
-    # batch margin / mutual-argmax verdict assembly on the drained
-    # candidate relation
-    dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
-    wx = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("tgt_id"))
-    wy = Window.partitionBy("tgt_id").orderBy(F.desc("sim"), F.asc("src_id"))
-    avg_x = (
-        pairs.withColumn("rk", F.row_number().over(wx))
-        .filter(F.col("rk") <= BITEXT_K)
-        .groupBy("src_id")
-        .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ax"))
-    )
-    avg_y = (
-        pairs.withColumn("rk", F.row_number().over(wy))
-        .filter(F.col("rk") <= BITEXT_K)
-        .groupBy("tgt_id")
-        .agg((F.sum(dec("sim")).cast("double") / F.count("*")).alias("ay"))
-    )
-    den = F.lit(0.5) * (F.col("ax") + F.col("ay"))
-    scored = (
-        pairs.join(avg_x, "src_id")
-        .join(avg_y, "tgt_id")
-        .withColumn("margin", F.when(den > 0, F.col("sim") / den))
-        .filter(F.col("margin") >= BITEXT_MARGIN)
-    )
-    mx = Window.partitionBy("src_id").orderBy(
-        F.desc("margin"), F.desc("sim"), F.asc("tgt_id")
-    )
-    my = Window.partitionBy("tgt_id").orderBy(
-        F.desc("margin"), F.desc("sim"), F.asc("src_id")
-    )
-    return (
-        scored.withColumn("rx", F.row_number().over(mx))
-        .withColumn("ry", F.row_number().over(my))
-        .filter((F.col("rx") == 1) & (F.col("ry") == 1))
-        .select("src_id", "tgt_id", "sim", F.round("margin", 6).alias("margin"))
-    )
-
-
-def _stream_bitext_mining_sql() -> str:
-    from capstone_etl_spark.operators.similarity import BITEXT_MINING_SQL
-
-    return BITEXT_MINING_SQL
 
 
 def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1287,16 +1068,6 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic_dedup_hier row-for-row (same oracle). This is
     stream_dedup_incremental's embedding-space sibling — the admission
     gate an embedding-deduped 100 TB corpus runs at its front door."""
-    from capstone_etl_spark.operators.similarity import qcosine
-    from capstone_etl_spark.operators.similarity import (
-        SEMDEDUP_THRESHOLD,
-        hier_assign,
-        hier_best_cell_expr,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
@@ -1312,12 +1083,8 @@ def stream_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("qe"),
             quant.alias("vq"),
         )
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
         return (
             arriving.join(F.broadcast(brow), F.lit(True))
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
             .select("vec_b", "qe", hier_best_cell_expr().alias("cell"))
             .join(members, "cell")
             .filter(F.col("vec_a") < F.col("vec_b"))
@@ -1342,44 +1109,20 @@ def stream_hivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hivf_cell_balance exactly (shared _cell_balance_tail + shared
     oracle) — the share/cap audit a 100 TB deployment watches while
     shards of vectors land."""
-    from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
-    from capstone_etl_spark.operators.similarity import (
-        hier_best_cell_expr,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-    )
-
     quant = quantize_fp()
     emb_q = load_table(spark, sf_dir, "embeddings").select("vec_id", quant.alias("vq"))
     brow = _stream_static(hier_branch_cells_row(emb_q))
 
     def transform(stream, _):
-        route = hier_route_expr()
-        cand_cells = F.flatten(F.transform(F.col("route"), lambda r: r["cells"]))
         assigned = (
             stream.select(quant.alias("vq"))
             .join(F.broadcast(brow), F.lit(True))
-            .withColumn("route", route)
-            .withColumn("cand", cand_cells)
             .select(hier_best_cell_expr().alias("cell"))
         )
         return assigned.groupBy("cell").agg(F.count("*").cast("long").alias("pop"))
 
     snap = _run(spark, sf_dir, transform, "complete", table="embeddings")
     return _cell_balance_tail(snap)
-
-
-def _stream_hivf_cell_balance_sql() -> str:
-    from capstone_etl_spark.operators.scaleaudit import _hivf_cell_balance_sql
-
-    return _hivf_cell_balance_sql()
-
-
-def _stream_semantic_dedup_hier_sql() -> str:
-    from capstone_etl_spark.operators.similarity import SEMANTIC_DEDUP_HIER_SQL
-
-    return SEMANTIC_DEDUP_HIER_SQL
 
 
 def stream_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1394,8 +1137,6 @@ def stream_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstones filtered in the shared final projection — must equal
     the batch apply row-for-row (same oracle; also pinned
     Spark-vs-Spark in tests)."""
-    from capstone_etl_spark.operators.events import changelog_snapshot, changelog_state
-
     snap = _run(
         spark,
         sf_dir,
@@ -1424,9 +1165,6 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collect_list order is nondeterministic — array_min doesn't
     care). The share/cap columns attach in the final batch projection
     over the drained ≈√N-row table."""
-    from capstone_etl_spark.operators.scaleaudit import _cell_balance_tail
-    from capstone_etl_spark.operators.similarity import quantize_fp, quantizer_seeds
-
     quant = quantize_fp()
     seeds = quantizer_seeds(
         load_table(spark, sf_dir, "embeddings").select("vec_id", quant.alias("vq"))
@@ -1440,14 +1178,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d2_structs = F.transform(
         F.col("seedlist"),
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("vq"), s["sq"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            s["cell"].alias("cell"),
-        ),
+        lambda s: F.struct(_d2_fold("vq", s["sq"]).alias("d2"), s["cell"].alias("cell")),
     )
 
     def transform(stream, _):
@@ -1472,9 +1203,6 @@ def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     register file equals the batch sketch's exactly; the shared
     hll_finalize tail (estimator arithmetic) and the static exact
     counts produce the identical audit row — batch oracle verbatim."""
-    from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.sketches import hll_finalize, hll_rho_rows
-
     def transform(stream, _):
         toks = stream.select("source", F.explode(tokenize("text")).alias("token"))
         return hll_rho_rows(toks).groupBy("source", "bucket").agg(
@@ -1490,18 +1218,6 @@ def stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n_exact"))
     )
     return hll_finalize(snap, exact)
-
-
-def _stream_ivf_assign_sql() -> str:
-    from capstone_etl_spark.operators.scaleaudit import _ivf_cell_balance_sql
-
-    return _ivf_cell_balance_sql()
-
-
-def _stream_hll_sketch_sql() -> str:
-    from capstone_etl_spark.operators.sketches import HLL_DISTINCT_SKETCH_SQL
-
-    return HLL_DISTINCT_SKETCH_SQL
 
 
 def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1524,13 +1240,6 @@ def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user min(mn)/max(mx) is the final state — the `upd` counter
     the Python form needed for last-emission selection is redundant.
     Output equality is oracle-pinned (same batch SQL)."""
-    from capstone_etl_spark.operators.events import (
-        AB_CONVERT_TYPE,
-        AB_EXPOSE_TYPE,
-        ab_readout,
-        ab_variant_col,
-    )
-
     def transform(stream, _):
         prepared = stream.filter(
             F.col("event_type").isin(AB_EXPOSE_TYPE, AB_CONVERT_TYPE)
@@ -1669,42 +1378,6 @@ WHERE c.cum_prev < g.target AND g.target <= c.cum
 """
 
 
-def _stream_pareto_sql() -> str:
-    from capstone_etl_spark.operators.quality import PARETO_FRONTIER_DOCS_SQL
-
-    return PARETO_FRONTIER_DOCS_SQL
-
-
-def _stream_cuped_sql() -> str:
-    from capstone_etl_spark.operators.events import _cuped_sql
-
-    return _cuped_sql()
-
-
-def _stream_nb_sql() -> str:
-    from capstone_etl_spark.operators.textstats import NAIVE_BAYES_SOURCE_MODEL_SQL
-
-    return NAIVE_BAYES_SOURCE_MODEL_SQL
-
-
-def _stream_rfm_sql() -> str:
-    from capstone_etl_spark.operators.events import RFM_SEGMENTS_SQL
-
-    return RFM_SEGMENTS_SQL
-
-
-def _stream_ks_drift_sql() -> str:
-    from capstone_etl_spark.operators.textstats import KS_SOURCE_DRIFT_SQL
-
-    return KS_SOURCE_DRIFT_SQL
-
-
-def _stream_group_dro_sql() -> str:
-    from capstone_etl_spark.operators.quality import GROUP_DRO_WEIGHTS_SQL
-
-    return GROUP_DRO_WEIGHTS_SQL
-
-
 def stream_group_dro(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Group-DRO mixing weights kept current DURING ingest: the
     (source, token) term-frequency cells accumulate in a complete-mode
@@ -1714,9 +1387,6 @@ def stream_group_dro(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on the drained snapshot: every micro-batch could re-weight
     the mixer without rescanning landed text. Oracle: the batch DRO
     SQL verbatim."""
-    from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.quality import dro_release
-
     snap = _run(
         spark,
         sf_dir,
@@ -1738,8 +1408,6 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained snapshot, so every micro-batch could re-publish the drift
     table without rescanning landed shards. Oracle: the batch KS SQL
     verbatim."""
-    from capstone_etl_spark.operators.textstats import ks_release
-
     snap = _run(
         spark,
         sf_dir,
@@ -1769,8 +1437,6 @@ def stream_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     references the user relation five times (three rankings + the
     base row + totals), and a memory-sink table self-joined that way
     carries conflicting references."""
-    from capstone_etl_spark.operators.events import rfm_release
-
     snap = _run(
         spark,
         sf_dir,
@@ -1802,10 +1468,6 @@ def stream_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     The snapshot passes through checkpoint_truncate (the tail
     references the cell relation three times: vocab, per-source
     totals, the score join)."""
-    from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.sampling import split_column
-    from capstone_etl_spark.operators.textstats import nb_release
-
     snap = _run(
         spark,
         sf_dir,
@@ -1834,8 +1496,6 @@ def stream_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     checkpoint_truncate first: the tail references the per-user
     relation twice (pooled moments + per-variant rollup)."""
-    from capstone_etl_spark.operators.events import ab_variant_col, cuped_release
-
     def transform(stream, staged):
         t_mid = _ts_midpoint(staged)
         dec = F.col("value").cast("decimal(18,2)")
@@ -1869,9 +1529,6 @@ def stream_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     checkpoint_truncate first: the tail windows over and joins the
     maxima relation, and memory-sink self-references conflict."""
-    from capstone_etl_spark.functions.text import tokenize
-    from capstone_etl_spark.operators.quality import _pareto_toks, pareto_release
-
     snap = _run(
         spark,
         sf_dir,
@@ -1899,8 +1556,6 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed events. Oracle: the batch PSI SQL verbatim (the grid
     literals are computed by the same expressions the batch plan
     evaluates, so the releases agree exactly)."""
-    from capstone_etl_spark.operators.events import PSI_BINS, psi_release
-
     def transform(stream, staged):
         t_mid = _ts_midpoint(staged)
         v_lo, v_hi = staged.filter(F.unix_micros("ts") <= t_mid).agg(
@@ -1945,14 +1600,13 @@ def stream_conversion_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per user + one 'c' row per distinct (user, conversion ts) —
     the same accepted class as stream_training_manifest's one row per
     admitted doc; merges are min/max on exact integers, so the drained
-    table is replay-order-independent like the Python form."""
-    from capstone_etl_spark.operators.events import (
-        AB_CONVERT_TYPE,
-        AB_EXPOSE_TYPE,
-        KM_BUCKET_US,
-        km_curve,
-    )
+    table is replay-order-independent like the Python form.
 
+    Unbounded state: the aggregation has no watermark, so no state row
+    is ever evicted. On an unbounded stream the 'c' rows grow with
+    every distinct (user, conversion ts) pair for the life of the
+    query; only a bounded replay such as this one ends with them
+    drained."""
     def transform(stream, _):
         ev = stream.select(
             "user_id",
@@ -2022,8 +1676,6 @@ def stream_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch release SQL verbatim (the noise is a deterministic
     function of (salt, source), so stream and batch releases agree
     exactly)."""
-    from capstone_etl_spark.operators.privacy import dp_release
-
     snap = _run(
         spark,
         sf_dir,
@@ -2082,19 +1734,6 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild); the production deployment reads them as published
     artifacts and pays only the streaming legs + the drained
     assembly."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.functions.text import token_ngrams, tokenize
-    from capstone_etl_spark.operators.corpus import MIN_CHARS, N_SHARDS
-    from capstone_etl_spark.operators.dedup import (
-        BENCH_MOD,
-        CONTAINMENT_THRESHOLD,
-        JACCARD_THRESHOLD,
-        NGRAM_N,
-        connected_components,
-        shingle_df_cap,
-    )
-    from capstone_etl_spark.operators.sampling import split_column
-
     # static index legs go through checkpoint_truncate, not cached()
     # (r12, guide §1.2/§5): a cache is matched BY PLAN, and the
     # per-micro-batch IncrementalExecution re-derives the stream
@@ -2148,10 +1787,7 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 F.lit("doc").alias("kind"),
                 F.col("doc_id").alias("a"),
-                (
-                    md5_hash60(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
-                    % N_SHARDS
-                ).cast("long").alias("b"),
+                shard_col().alias("b"),
                 F.size("toks").cast("long").alias("v1"),
                 F.lit(1).cast("long").alias("v2"),
                 split_column(F.col("doc_id")).alias("split"),
@@ -2234,40 +1870,18 @@ def stream_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # batch verdict assembly over the drained (already-thresholded)
     # state table
-    pairs = got.filter(F.col("kind") == "dd").select("a", "b")
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    labels = connected_components(edges)
-    contaminated = (
-        got.filter(F.col("kind") == "dc")
-        .select(F.col("a").alias("doc_id"))
-        .distinct()
-    )
-    admitted = (
-        got.filter(F.col("kind") == "doc")
-        .select(
+    return manifest_release(
+        got.filter(F.col("kind") == "doc").select(
             F.col("a").alias("doc_id"),
             F.col("b").alias("shard_id"),
             F.col("s1").alias("n_tokens"),
             "split",
-        )
-        .join(labels, "doc_id", "left")
-        .filter(F.col("doc_id") == F.coalesce("label", "doc_id"))
-        .join(contaminated, "doc_id", "left_anti")
+        ),
+        got.filter(F.col("kind") == "dd").select(
+            F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
+        ),
+        got.filter(F.col("kind") == "dc").select(F.col("a").alias("doc_id")).distinct(),
     )
-    return admitted.groupBy("split", "shard_id").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        F.min("doc_id").cast("long").alias("min_doc_id"),
-        F.max("doc_id").cast("long").alias("max_doc_id"),
-    )
-
-
-def _stream_training_manifest_sql() -> str:
-    from capstone_etl_spark.operators.corpus import _training_manifest_sql
-
-    return _training_manifest_sql()
 
 
 def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2287,16 +1901,11 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim. The nested-sample property (level L+1 ⊆ level L) is what
     makes this THE 100 TB shape: shards sketched at different corpus
     epochs merge by re-filter + union, never by resampling."""
-    from capstone_etl_spark.functions.hashing import md5_hash60
-    from capstone_etl_spark.operators.sketches import KLL_QS, _kll_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    h = md5_hash60(F.concat(F.lit("kll:"), F.col("doc_id").cast("string")))
-    vals_b = docs.select("source", F.col("n_chars").alias("v"), h.alias("h"))
+    vals_b = _kll_vals(load_table(spark, sf_dir, "documents"))
     stats = _stream_static(_kll_stats(vals_b))
 
     def transform(stream, _):
-        svals = stream.select("source", F.col("n_chars").alias("v"), h.alias("h"))
+        svals = _kll_vals(stream)
         surv = (
             svals.join(stats, "source")
             .filter(F.col("h") % F.col("w") == 0)
@@ -2311,90 +1920,22 @@ def stream_kll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("c"))
         )
 
-    got = cached(_run(spark, sf_dir, transform, "complete", table="documents"))
-
-    # batch assembly over the drained state (the n ticks reproduce
-    # the batch per-source counts, so L/w/r recompute identically)
-    samp = got.filter(F.col("kind") == "s").select("source", "v", "c")
-    wv = Window.partitionBy("source").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
+    # truncated: the release joins the survivor cells against stats
+    # built from the n ticks, and both descend from the drained sink
+    # (the sink-self-join lesson, checkpoint_truncate)
+    got = checkpoint_truncate(
+        _run(spark, sf_dir, transform, "complete", table="documents")
     )
-    samp_cum = samp.join(F.broadcast(stats), "source").select(
-        "source", "v", (F.sum(F.col("c")).over(wv) * F.col("w")).alias("cumw")
-    )
-    szs = samp.groupBy("source").agg(
-        F.sum("c").cast("long").alias("sample_size"), F.max("v").alias("vmax")
-    )
-    # qcfg and samp_cum both descend from the drained sink — truncate
-    # one side's lineage so the join carries no conflicting
-    # references (the sink-self-join lesson, checkpoint_truncate)
-    qcfg = checkpoint_truncate(
+    # the drained n ticks reproduce the batch per-source counts and
+    # feed the release's ⌈q·n⌉ rank cut; L/w are the deploy-time levels
+    drained_stats = (
         got.filter(F.col("kind") == "n")
         .groupBy("source")
         .agg(F.sum("c").cast("long").alias("n"))
-        .join(F.broadcast(stats.select("source", "L")), "source")
-        .select(
-            F.col("source").alias("qsrc"), "n", "L",
-            F.explode(F.array(*[F.lit(q) for q in KLL_QS])).alias("q"),
-        )
-        .select(
-            "qsrc", "n", "L", "q",
-            F.ceil(F.col("q") * F.col("n").cast("double")).cast("long").alias("r"),
-        )
+        .join(F.broadcast(stats.select("source", "L", "w")), "source")
     )
-    est = (
-        qcfg.join(
-            samp_cum,
-            (F.col("qsrc") == F.col("source")) & (F.col("cumw") >= F.col("r")),
-            "left",
-        )
-        .groupBy(F.col("qsrc").alias("source"), "q", "n", "L", "r")
-        .agg(F.min("v").alias("est_v"))
-    )
-    wvx = Window.partitionBy("source").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    val_cum = (
-        vals_b.groupBy("source", "v")
-        .agg(F.count("*").alias("cnt"))
-        .select("source", "v", F.sum("cnt").over(wvx).alias("cum"))
-    )
-    exact = (
-        qcfg.select("qsrc", "q", "r")
-        .join(
-            val_cum,
-            (F.col("qsrc") == F.col("source")) & (F.col("cum") >= F.col("r")),
-        )
-        .groupBy(F.col("qsrc").alias("source"), "q")
-        .agg(F.min("v").cast("double").alias("exact_quantile"))
-    )
-    return (
-        est.join(szs, "source")
-        .join(exact, ["source", "q"])
-        .select(
-            "source",
-            "q",
-            F.col("n").cast("long").alias("n"),
-            F.col("L").cast("long").alias("level"),
-            "sample_size",
-            F.col("r").alias("target_rank"),
-            F.coalesce(F.col("est_v"), F.col("vmax")).cast("double").alias("est_quantile"),
-            "exact_quantile",
-            F.round(
-                F.abs(
-                    F.coalesce(F.col("est_v"), F.col("vmax")).cast("double")
-                    - F.col("exact_quantile")
-                ),
-                6,
-            ).alias("abs_error"),
-        )
-    )
-
-
-def _stream_kll_sketch_sql() -> str:
-    from capstone_etl_spark.operators.sketches import KLL_QUANTILE_SKETCH_SQL
-
-    return KLL_QUANTILE_SKETCH_SQL
+    samp = got.filter(F.col("kind") == "s").select("source", "v", "c")
+    return _kll_release(vals_b, drained_stats, samp)
 
 
 def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2405,7 +1946,7 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     list) and the cell-assigned base members are STATIC relations (the
     published index artifacts); delta vectors arrive as a stream, each
     one routes to its base cell with PER-ROW column math (the
-    stream_ann_hivf trick — hier_route_expr picks the BRANCH_PROBES
+    stream_ann_hivf trick — hier_cand_expr picks the BRANCH_PROBES
     nearest branches in-row, then an integer argmin over the routed
     branches' flattened cell lists), and the stream-static cell join
     emits (arrival, base-member) vote candidates keyed by the EXACT
@@ -2420,23 +1961,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     one cell's members (quantizer law ≈√N_base); nothing aggregates
     in-stream, so re-delivery cannot corrupt state (there is none) and
     the sink is verdict-relevant rows only."""
-    from capstone_etl_spark.operators.dedup import _is_delta
-    from capstone_etl_spark.operators.similarity import (
-        BRANCH_PROBES,
-        _d2_fold,
-        _hier_cand_seed,
-        hier_assign,
-        hier_best_cell_expr,
-        hier_branch_cells_row,
-        hier_route_expr,
-        quantize_fp,
-    )
-    from capstone_etl_spark.operators.valuation import (
-        NOISE_K,
-        NOISE_MIN_VOTES,
-        _noise_verdict_cols,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     quant = quantize_fp()
     emb_q = emb.select("vec_id", quant.alias("vq"))
@@ -2465,8 +1989,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
                 quant.alias("vq"),
             )
             .join(F.broadcast(index_row), F.lit(True))
-            .withColumn("route", hier_route_expr(BRANCH_PROBES))
-            .withColumn("cand", F.flatten(F.transform("route", lambda r: r["cells"])))
             .select(
                 "vec_a",
                 F.col("vq").alias("qa"),
@@ -2483,18 +2005,6 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     drained = _run(spark, sf_dir, transform, "append", table="embeddings")
 
-    # batch verdict tail over the drained candidate table
-    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
-    votes = (
-        drained.withColumn("rnk", F.row_number().over(wv))
-        .filter(F.col("rnk") <= NOISE_K)
-        .groupBy("vec_a")
-        .agg(
-            F.count("*").alias("n_votes"),
-            F.sum("match").alias("n_agree"),
-        )
-        .withColumnRenamed("vec_a", "vec_id")
-    )
     # delta rows with their routed cells, recomputed batch-side for
     # the left join (cheap: |delta| rows against the hier index)
     delta_rows = (
@@ -2504,20 +2014,8 @@ def stream_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("m.cell").alias("cell"))
         .join(emb.select("vec_id", "label"), "vec_id")
     )
-    out = delta_rows.join(votes, "vec_id", "left").select(
-        "vec_id", "label", "cell", *_noise_verdict_cols()
-    )
-    return out.withColumn(
-        "suspect",
-        (F.col("n_votes") >= NOISE_MIN_VOTES)
-        & (F.col("n_agree") * 2 < F.col("n_votes")),
-    )
-
-
-def _stream_label_noise_sql() -> str:
-    from capstone_etl_spark.operators.valuation import LABEL_NOISE_INCREMENTAL_SQL
-
-    return LABEL_NOISE_INCREMENTAL_SQL
+    # the batch verdict tail over the drained candidate table
+    return noise_release(delta_rows, noise_tally(drained))
 
 
 def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2532,8 +2030,6 @@ def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift, base sd, standardized shift, all ROUND(·,6)), so the
     oracle is EMBEDDING_SHIFT_AUDIT_SQL verbatim. Decimal sums are
     order-free, so micro-batch arrival order cannot change a digit."""
-    from capstone_etl_spark.operators.dedup import _is_delta
-
     emb = load_table(spark, sf_dir, "embeddings")
     dec = lambda c: c.cast("decimal(20,12)")  # noqa: E731
     base = _stream_static(
@@ -2569,30 +2065,7 @@ def stream_embedding_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_d",
         "ssq_b",
     )
-    # the batch operator's derived tail, expression for expression
-    base_mean = F.round(F.col("sum_b").cast("double") / F.col("n_base"), 6)
-    delta_mean = F.round(F.col("sum_d").cast("double") / F.col("n_delta"), 6)
-    base_var = (
-        F.col("ssq_b").cast("double") / F.col("n_base") - base_mean * base_mean
-    )
-    base_sd = F.round(F.sqrt(F.greatest(base_var, F.lit(0.0))), 6)
-    shift = F.round(delta_mean - base_mean, 6)
-    return joined.select(
-        "d",
-        "n_base",
-        "n_delta",
-        base_mean.alias("base_mean"),
-        delta_mean.alias("delta_mean"),
-        shift.alias("shift"),
-        base_sd.alias("base_sd"),
-        F.when(base_sd > 0, F.round(shift / base_sd, 6)).alias("std_shift"),
-    )
-
-
-def _stream_embedding_shift_sql() -> str:
-    from capstone_etl_spark.operators.valuation import EMBEDDING_SHIFT_AUDIT_SQL
-
-    return EMBEDDING_SHIFT_AUDIT_SQL
+    return shift_release(joined)
 
 
 def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2608,10 +2081,6 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     share/mean projection (total = sum of drained pops — the stream
     saw the whole corpus), so the oracle is CORESET_COVERAGE_AUDIT_SQL
     verbatim."""
-    from capstone_etl_spark.functions.vectors import dot_long
-    from capstone_etl_spark.operators.similarity import quantize_fp
-    from capstone_etl_spark.operators.valuation import _kcenter_select
-
     _, acc = _kcenter_select(spark, sf_dir)
     # centers ride as fixed-point lists + exact squared norms —
     # the quantized-cosine rank-key discipline (valuation.py module
@@ -2633,21 +2102,7 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         d_structs = F.transform(
             F.col("centers"),
             lambda s: F.struct(
-                (
-                    F.lit(1.0)
-                    - F.when(
-                        (F.col("na2") > 0) & (s["sn2"] > 0),
-                        F.aggregate(
-                            F.zip_with(F.col("vq"), s["sq"], lambda x, y: x * y),
-                            F.lit(0).cast("long"),
-                            lambda a, x: a + x,
-                        ).cast("double")
-                        / (
-                            F.sqrt(F.col("na2").cast("double"))
-                            * F.sqrt(s["sn2"].cast("double"))
-                        ),
-                    ).otherwise(F.lit(None))
-                ).alias("d"),
+                (F.lit(1.0) - quantized_cosine("vq", s["sq"], "na2", s["sn2"])).alias("d"),
                 s["center_id"].alias("center_id"),
             ),
         )
@@ -2658,30 +2113,10 @@ def stream_coreset_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.array_min(d_structs).alias("m"))
             .select(F.col("m.center_id").alias("center_id"), F.col("m.d").alias("d"))
         )
-        return assigned.groupBy("center_id").agg(
-            F.count("*").cast("long").alias("pop"),
-            F.sum(F.col("d").cast("decimal(20,12)")).alias("sum_d"),
-            F.max("d").alias("max_d"),
-        )
+        return coverage_cells(assigned)
 
     drained = _run(spark, sf_dir, transform, "complete", table="embeddings")
-    total = drained.agg(F.sum("pop").alias("total"))
-    return (
-        drained.join(F.broadcast(total), F.lit(True))
-        .select(
-            "center_id",
-            "pop",
-            (F.col("pop") / F.col("total")).alias("share"),
-            (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
-            "max_d",
-        )
-    )
-
-
-def _stream_coreset_coverage_sql() -> str:
-    from capstone_etl_spark.operators.valuation import CORESET_COVERAGE_AUDIT_SQL
-
-    return CORESET_COVERAGE_AUDIT_SQL
+    return coverage_release(drained, drained.agg(F.sum("pop").alias("total")))
 
 
 QUERIES = {
@@ -2736,19 +2171,19 @@ ORACLE_SQL = {
     "stream_user_activity": STREAM_USER_ACTIVITY_SQL,
     "stream_click_attribution": STREAM_CLICK_ATTRIBUTION_SQL,
     "stream_tier_rollup": STREAM_TIER_ROLLUP_SQL,
-    "stream_quality_funnel": _stream_quality_funnel_sql(),
+    "stream_quality_funnel": QUALITY_FILTER_FUNNEL_SQL,
     "stream_kmv_sketch": _stream_kmv_sketch_sql(),
-    "stream_reservoir_sample": _stream_reservoir_sample_sql(),
+    "stream_reservoir_sample": RESERVOIR_SAMPLE_SQL,
     "stream_mixing_weights": STREAM_MIXING_WEIGHTS_SQL,
     "stream_count_min": _stream_count_min_sql(),
-    "stream_decontamination": _stream_decontamination_sql(),
+    "stream_decontamination": DECONTAMINATION_SQL,
     "stream_pii_scan": PII_SCAN_SQL,
-    "stream_template_extraction": _stream_template_extraction_sql(),
-    "stream_dedup_incremental": _stream_dedup_incremental_sql(),
-    "stream_ann_topk": _stream_ann_topk_sql(),
+    "stream_template_extraction": TEMPLATE_EXTRACTION_SQL,
+    "stream_dedup_incremental": DEDUP_INCREMENTAL_SQL,
+    "stream_ann_topk": ANN_IVF_TOPK_SQL,
     "stream_changelog_apply": CHANGELOG_APPLY_SQL,
-    "stream_ivf_assign": _stream_ivf_assign_sql(),
-    "stream_hll_sketch": _stream_hll_sketch_sql(),
+    "stream_ivf_assign": _ivf_cell_balance_sql(),
+    "stream_hll_sketch": HLL_DISTINCT_SKETCH_SQL,
     # the batch readout SQL verbatim: the streaming form must reproduce
     # the batch experiment statistics exactly
     "stream_ab_test": AB_TEST_ANALYSIS_SQL,
@@ -2764,54 +2199,54 @@ ORACLE_SQL = {
     "stream_psi_drift": EVENT_PSI_DRIFT_SQL,
     # the batch DRO SQL verbatim: TF cells merge by addition, so the
     # drained snapshot equals the batch TF relation exactly
-    "stream_group_dro": _stream_group_dro_sql(),
+    "stream_group_dro": GROUP_DRO_WEIGHTS_SQL,
     # the batch KS SQL verbatim: (source, len) cells merge by addition,
     # so the drained snapshot equals the batch count relation exactly
-    "stream_ks_drift": _stream_ks_drift_sql(),
+    "stream_ks_drift": KS_SOURCE_DRIFT_SQL,
     # the batch RFM SQL verbatim: per-user state merges order-free
     # (max / count / exact decimal sum), so the drained snapshot
     # equals the batch user relation exactly
-    "stream_rfm_segments": _stream_rfm_sql(),
+    "stream_rfm_segments": RFM_SEGMENTS_SQL,
     # the batch NB SQL verbatim: train cells merge by addition and the
     # split is a per-row salted hash, so the drained model equals the
     # batch one exactly
-    "stream_naive_bayes": _stream_nb_sql(),
+    "stream_naive_bayes": NAIVE_BAYES_SOURCE_MODEL_SQL,
     # the batch CUPED SQL verbatim: per-user pre/post decimal sums
     # merge by addition once the midpoint literal is fixed
-    "stream_cuped": _stream_cuped_sql(),
+    "stream_cuped": _cuped_sql(),
     # the batch skyline SQL verbatim: per-length maxima merge as MAX
-    "stream_pareto_frontier": _stream_pareto_sql(),
+    "stream_pareto_frontier": PARETO_FRONTIER_DOCS_SQL,
     # the batch manifest SQL verbatim: the drained admission state runs
     # the identical verdict assembly, so the streamed manifest equals
     # the batch one row-for-row
-    "stream_training_manifest": _stream_training_manifest_sql(),
+    "stream_training_manifest": _training_manifest_sql(),
     # the batch sketch SQL verbatim: the deploy-time level literals are
     # the batch expressions, survivor cells merge by addition, and the
     # drained assembly is the batch tail
-    "stream_kll_sketch": _stream_kll_sketch_sql(),
+    "stream_kll_sketch": KLL_QUANTILE_SKETCH_SQL,
     # the batch two-level-index SQL verbatim: the in-row route/probe
     # reproduces the batch tiebreaks exactly, so the drained serving
     # results equal the batch index lookups
-    "stream_ann_hivf_topk": _stream_ann_hivf_topk_sql(),
-    "stream_ann_hivf_pq_topk": _stream_ann_hivf_pq_topk_sql(),
+    "stream_ann_hivf_topk": ANN_HIVF_TOPK_SQL,
+    "stream_ann_hivf_pq_topk": ANN_HIVF_PQ_TOPK_SQL,
     # the batch miner SQL verbatim: the drained append-mode pair table
     # is the batch candidate relation, and the margin/mutual assembly
     # is the batch code
-    "stream_bitext_mining": _stream_bitext_mining_sql(),
+    "stream_bitext_mining": BITEXT_MINING_SQL,
     # the batch hier-SemDeDup SQL verbatim: the drained dup relation
     # joins the static assignment into the identical output shape
-    "stream_semantic_dedup_hier": _stream_semantic_dedup_hier_sql(),
+    "stream_semantic_dedup_hier": SEMANTIC_DEDUP_HIER_SQL,
     # the batch hier balance SQL verbatim: per-cell pops merge by
     # addition, so the drained dashboard equals the batch audit
-    "stream_hivf_cell_balance": _stream_hivf_cell_balance_sql(),
+    "stream_hivf_cell_balance": _hivf_cell_balance_sql(),
     # the batch delta-vs-base label screen SQL verbatim: the stream is
     # stateless (append-mode vote candidates) and the verdict tail is
     # shared, so the drained output equals the batch screen exactly
-    "stream_label_noise": _stream_label_noise_sql(),
+    "stream_label_noise": LABEL_NOISE_INCREMENTAL_SQL,
     # the batch drift screen SQL verbatim: per-dim decimal sums merge
     # by addition (DIM rows of state), the derived tail is shared
-    "stream_embedding_shift": _stream_embedding_shift_sql(),
+    "stream_embedding_shift": EMBEDDING_SHIFT_AUDIT_SQL,
     # the batch coverage audit SQL verbatim: per-center (pop, decimal
     # sum, max) merge by addition/max (KCENTER_K rows of state)
-    "stream_coreset_coverage": _stream_coreset_coverage_sql(),
+    "stream_coreset_coverage": CORESET_COVERAGE_AUDIT_SQL,
 }

@@ -57,12 +57,8 @@ WITH toks AS (
 """
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 def _tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return term_frequencies(_docs(spark, sf_dir))
+    return term_frequencies(load_table(spark, sf_dir, "documents"))
 
 
 def _pairs_string(pairs_col, key, val) -> F.Column:
@@ -105,7 +101,7 @@ def stopword_full_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-side filter ahead of the TF shuffle, so the only thing this
     query varies is the gate WIDTH — proving the anti-join mechanism
     holds at the reference's full configuration size."""
-    tf = term_frequencies(_docs(spark, sf_dir), stopwords=full_stopwords())
+    tf = term_frequencies(load_table(spark, sf_dir, "documents"), stopwords=full_stopwords())
     return _doc_stats(tf)
 
 
@@ -131,7 +127,7 @@ FROM tf GROUP BY doc_id
 
 def dictionary_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2/J2: TF restricted to dictionary words via broadcast semi-join."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     dict_df = spark.createDataFrame([(w,) for w in DICTIONARY], "word string")
     return (
         doc_tokens(docs, dictionary=dict_df)
@@ -152,7 +148,7 @@ def dictionary_file_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.go:108-118, :251) as a distributed plan."""
     from capstone_etl_spark.sources.dictionary import load_dictionary
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return (
         doc_tokens(docs, dictionary=load_dictionary(spark))
         .groupBy("doc_id", "token")
@@ -347,7 +343,7 @@ def substring_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragment (substring semantics, not token match)."""
     from capstone_etl_spark.functions.text import count_substring
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         count_substring("text", "scan").cast("long").alias("n_scan"),
@@ -368,7 +364,7 @@ def doc_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference: id++ per row in url order, main.go:137-141). Uses the
     distributed partition-offset implementation — no single-partition
     window, no RDD — so the same code is the 100 TB path."""
-    pages = hier_ops.synthetic_doc_paths(_docs(spark, sf_dir)).select("doc_id", "page_loc")
+    pages = hier_ops.synthetic_doc_paths(load_table(spark, sf_dir, "documents")).select("doc_id", "page_loc")
     return with_dense_ids(pages, "page_loc", id_name="dense_id").select(
         "doc_id", "page_loc", "dense_id"
     )
@@ -394,7 +390,7 @@ def parent_child(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix strip (main.go:194 — off-prefix URLs yield NULL instead of
     the reference's panic, §7.6.5) → parent_path → LEFT OUTER self-join;
     NULL parent for roots/off-wiki docs (divergence §7.6.3)."""
-    urls = hier_ops.synthetic_doc_urls(_docs(spark, sf_dir))
+    urls = hier_ops.synthetic_doc_urls(load_table(spark, sf_dir, "documents"))
     pages = hier_ops.derive_paths(urls, url_col="url").select(
         "doc_id", "page_loc", "parent_path"
     )
@@ -441,7 +437,7 @@ FROM withp c LEFT JOIN withp p ON c.parent_path = p.page_loc
 def parent_child_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: per-parent child count + canonical sorted child list (over
     the URL-derived hierarchy — F2 path)."""
-    urls = hier_ops.synthetic_doc_urls(_docs(spark, sf_dir))
+    urls = hier_ops.synthetic_doc_urls(load_table(spark, sf_dir, "documents"))
     pages = hier_ops.derive_paths(urls, url_col="url").select(
         "doc_id", "page_loc", "parent_path"
     )
@@ -493,7 +489,7 @@ def hierarchy_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     enters as a 1-row broadcast (no driver .count()). Five fixed rounds
     keep lineage linear; an open-ended variant would checkpoint like
     the CC loop (dedup.py)."""
-    urls = hier_ops.synthetic_doc_urls(_docs(spark, sf_dir))
+    urls = hier_ops.synthetic_doc_urls(load_table(spark, sf_dir, "documents"))
     pages = hier_ops.derive_paths(urls, url_col="url").select(
         "doc_id", "page_loc", "parent_path"
     )
@@ -592,7 +588,7 @@ def hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached so lineage stays linear. No windows, no driver actions.
 
     Oracle: WITH RECURSIVE ancestor walk + the same two aggregations."""
-    nodes = cached(_docs(spark, sf_dir).select("doc_id", "n_chars"))
+    nodes = cached(load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"))
     jump = nodes.filter(F.col("doc_id") >= 1).select(
         "doc_id", F.expr(f"(doc_id - 1) div {ROLLUP_ARITY}").alias("j")
     )

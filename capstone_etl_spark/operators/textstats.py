@@ -34,15 +34,11 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-score panel per document: lengths, alpha/digit/space
     ratios, stopword ratio, mean token length — the classic heuristic
     filter stack (C4/Gopher-style) as pure column math."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = tokenize("text")
     n_tok = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda t: t.isin(list(STOPWORDS))))
@@ -88,7 +84,7 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace fields vs a BPE-ish regex
     segmentation (letter runs | digit runs | single other-glyphs) —
     the standard pre-tokenizer shape."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     ws = F.size(tokenize("text"))
     bpe = F.size(F.regexp_extract_all(F.lower("text"), F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), 0))
     return docs.select(
@@ -132,7 +128,7 @@ def doc_fingerprint_df(docs: DataFrame) -> DataFrame:
 
 
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return doc_fingerprint_df(_docs(spark, sf_dir))
+    return doc_fingerprint_df(load_table(spark, sf_dir, "documents"))
 
 
 DOC_FINGERPRINT_SQL = f"""
@@ -157,7 +153,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     language marker profiles; argmax with lexicographic tiebreak;
     'und' when no profile hits. Compared against the corpus's labeled
     lang column for an accuracy readout downstream."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = tokenize("text")
     scores = [
         F.size(F.filter(toks, lambda t: t.isin(list(words)))).alias(f"score_{lang}")
@@ -251,7 +247,7 @@ def repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate/looping text. Pure per-doc explode + aggregate, one
     shuffle on doc_id; docs with < 3 tokens have no grams and emit
     NULL (nothing to judge). Exact-integer ratio, rounded once."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize("text").alias("t"))
     grams = toks.select(
         "doc_id",
@@ -312,7 +308,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     is cached: four consumers (bigram counts, bigram total, unigram
     counts, unigram total) share ONE tokenize pass — the regex clean is
     the expensive stage, the downstream explodes are cheap."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize("text").alias("t")).transform(cached)
     # t[i-1]/t[i] is 0-based SQL indexing; sequence(1, 0) DESCENDS, so
     # docs with < 2 tokens must be guarded to an empty array.
@@ -388,7 +384,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit partitionBy(lit(0)). Cumulative mass stays in exact
     longs, divided once at the end. freq is cached (vocab-sized) so
     the rank and the total consumers share one tokenize pass."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     freq = (
         docs.select(F.explode(tokenize("text")).alias("w"))
         .groupBy("w")
@@ -449,7 +445,7 @@ def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     12 places on both sides), summed EXACTLY, and only the final value
     is rounded to 6 decimals. One (doc_id, token) shuffle + one doc_id
     shuffle, both uniform."""
-    tok = _docs(spark, sf_dir).select("doc_id", F.explode(tokenize("text")).alias("token"))
+    tok = load_table(spark, sf_dir, "documents").select("doc_id", F.explode(tokenize("text")).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("cnt"))
     n = Window.partitionBy("doc_id")
     p = F.col("cnt") / F.sum("cnt").over(n)
@@ -495,7 +491,7 @@ def _winnow_mins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, pos, wmin) — every full window's minimum k-gram hash
     (the relation both the per-doc fingerprint rollup and the pairing
     query consume)."""
-    toks = _docs(spark, sf_dir).select("doc_id", tokenize("text").alias("toks"))
+    toks = load_table(spark, sf_dir, "documents").select("doc_id", tokenize("text").alias("toks"))
     k, w = WINNOW_K, WINNOW_W
     grams = toks.select(
         "doc_id",
@@ -654,7 +650,7 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final 6-decimal round."""
     from capstone_etl_spark.operators.vocab import with_dense_ids
 
-    tok = _docs(spark, sf_dir).select(F.explode(tokenize("text")).alias("token"))
+    tok = load_table(spark, sf_dir, "documents").select(F.explode(tokenize("text")).alias("token"))
     freq = tok.groupBy("token").agg(F.count("*").alias("tf"))
     ranked = with_dense_ids(freq, [F.col("tf").desc(), F.col("token")], id_name="_rid")
     x = F.log((F.col("_rid") + 1).cast("double")).cast("decimal(18,9)")
@@ -748,7 +744,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate guards: zero-token checkpoints drop (ln 0), and a
     zero-variance fit yields NULL fit columns in BOTH engines instead
     of Spark-NULL-vs-DuckDB-inf."""
-    tok = _docs(spark, sf_dir).select("doc_id", F.explode(tokenize("text")).alias("token"))
+    tok = load_table(spark, sf_dir, "documents").select("doc_id", F.explode(tokenize("text")).alias("token"))
     tf = cached(tok.groupBy("doc_id", "token").agg(F.count("*").alias("cnt")))
     first_seen = tf.groupBy("token").agg(F.min("doc_id").alias("first_doc"))
     per_doc = tf.groupBy("doc_id").agg(F.sum("cnt").alias("n_tok"))
@@ -900,7 +896,7 @@ def token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ratio is identical double arithmetic, rounded once."""
     from capstone_etl_spark.operators.vocab import with_dense_ids
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "doc_id", F.size(tokenize("text")).cast("long").alias("n_tok")
     )
@@ -976,7 +972,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking windows on a ≤ 2·C(64,2)-row relation. Exactness: counts
     are exact int64; support/confidence/lift divide identical doubles
     and round once."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     n_docs_rel = docs.agg(F.count("*").alias("n_docs"))
     # cached: the basket spine feeds the df top-k AND both sides of the
     # pair self-join — uncached, the corpus tokenize pass runs 3x
@@ -1097,7 +1093,7 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights snap to DECIMAL(28,10) so the prefix sums are EXACT and
     partitioning-independent. The grand total rides each row from the
     offsets relation; slot arithmetic is identical double ops."""
-    tok = _docs(spark, sf_dir).select(F.explode(tokenize("text")).alias("token"))
+    tok = load_table(spark, sf_dir, "documents").select(F.explode(tokenize("text")).alias("token"))
     freq = tok.groupBy("token").agg(F.count("*").alias("tf"))
     tfd = F.col("tf").cast("double")
     w = (F.sqrt(tfd) * F.sqrt(F.sqrt(tfd))).cast("decimal(28,10)")
@@ -1183,7 +1179,7 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice per token instance). Top-K via orderBy+limit
     (TakeOrderedAndProject — distributed partial top-k); rank assigned
     after the limit over exactly BPE_TOP_K rows (bounded_window_key)."""
-    tok = _docs(spark, sf_dir).select(F.explode(tokenize("text")).alias("token"))
+    tok = load_table(spark, sf_dir, "documents").select(F.explode(tokenize("text")).alias("token"))
     tf = tok.groupBy("token").agg(F.count("*").alias("tf"))
     pairs = tf.filter(F.length("token") >= 2).select(
         "tf",
@@ -1234,7 +1230,7 @@ def corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     token, the corpus total as a 1-row broadcast cross join, per-source
     totals via a window over the post-agg relation (bounded by
     per-source vocab)."""
-    tok = _docs(spark, sf_dir).select("source", F.explode(tokenize("text")).alias("token"))
+    tok = load_table(spark, sf_dir, "documents").select("source", F.explode(tokenize("text")).alias("token"))
     freq = tok.groupBy("source", "token").agg(F.count("*").alias("cnt"))
     gfreq = freq.groupBy("token").agg(F.sum("cnt").alias("gcnt"))
     gtot = freq.agg(F.sum("cnt").alias("gtot"))
@@ -1304,7 +1300,7 @@ def unicode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only per-row character counts (length before/after stripping
     the ASCII range — character semantics in both engines) into one
     per-source aggregation; ratios floor-snap to 6 dp."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     total = F.length("text").cast("long")
     ascii_n = F.length(F.regexp_replace(F.col("text"), "[\\x00-\\x7F]", "")).cast("long")
     # ascii_n above counts the NON-ascii remainder (ASCII chars removed)
@@ -1386,7 +1382,7 @@ def stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus doc count enters as a 1-row broadcast (allowlisted
     cartesian — tf_idf's shape). Ratios divide identical int64 pairs
     in both engines; emitted values floor-snap to 6 dp."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     per_src = (
         docs.select("doc_id", "source", F.explode(tokenize("text")).alias("token"))
@@ -1455,7 +1451,7 @@ def top_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window input is post-aggregation; the sketch alternative
     (count-min / approx_top_k) trades that shuffle for mergeable
     state — tests/test_sketches.py pins the approx toolkit instead."""
-    tok = _docs(spark, sf_dir).select(
+    tok = load_table(spark, sf_dir, "documents").select(
         "source", F.explode(tokenize("text")).alias("token")
     )
     freq = tok.groupBy("source", "token").agg(F.count("*").alias("cnt"))
@@ -1508,7 +1504,7 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTEGER-exact in both engines (length of the binary representation,
     never a float log2 whose last ulp could flip a power-of-two
     boundary)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(tokenize("text"))
     with_b = docs.select(
         "source", n_tok.alias("n_tok")
@@ -1552,7 +1548,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     One tokenize pass, two aggregations (per-source scalars + a
     per-source COUNT(DISTINCT) over the exploded tokens); divisions are
     exact-int over exact-int doubles, engine-identical."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = cached(docs.select("source", tokenize("text").alias("t")))
     per_src = toks.select(
         "source",
@@ -1621,7 +1617,7 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums exactly, and only the final mean rounds to 6 dp. Docs with
     fewer than 2 tokens have no bigrams and are absent by
     construction."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize("text").alias("t"))
     bigr = cached(
         toks.select(
@@ -1704,7 +1700,7 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     count). Top-K is distributed TakeOrdered with a (w1,w2) tiebreak —
     no global window. The probability expression is the identical
     IEEE-double tree in both engines; one 6-dp round at the end."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize("text").alias("t"))
     bigr = toks.select(
         F.explode(
@@ -1782,7 +1778,7 @@ def bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     `replace(token, pair, '_')` — greedy left-to-right non-overlapping
     in both engines, exactly BPE's merge semantics — over the
     AGGREGATED vocabulary, never the raw stream."""
-    tok = _docs(spark, sf_dir).select(F.explode(tokenize("text")).alias("token"))
+    tok = load_table(spark, sf_dir, "documents").select(F.explode(tokenize("text")).alias("token"))
     tf = cached(tok.groupBy("token").agg(F.count("*").alias("tf")))
     pairs = tf.filter(F.length("token") >= 2).select(
         "tf",
@@ -2049,7 +2045,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round after that runs on the aggregated vocabulary — pair
     expansion is ~mean-token-length rows per vocab entry, the argmax
     is a 1-row limit, the rewrite map-only."""
-    tok = _docs(spark, sf_dir).select(F.explode(tokenize("text")).alias("token"))
+    tok = load_table(spark, sf_dir, "documents").select(F.explode(tokenize("text")).alias("token"))
     tf = cached(tok.groupBy("token").agg(F.count("*").alias("tf")))
     _reprs, merge_rows = _bpe_learn_rounds(tf)
     out = merge_rows[0]
@@ -2188,7 +2184,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint-truncated lineage per round (the iterative-loop house
     rule); the final encode join is vocab-sized on the token key and
     the output is |sources| rows via a second tiny agg."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     stf = cached(
         docs.select("source", F.explode(tokenize("text")).alias("token"))
         .groupBy("source", "token")
@@ -2289,7 +2285,7 @@ def unigram_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output aggregation has ≤ MAX_WORD_LEN² cells, map-side
     combined. Oracle: identical relations, DP unrolled as
     UNI_MAX_WORD_LEN chained materialized CTEs."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     words = cached(
         docs.select(F.explode(tokenize("text")).alias("token"))
         .filter(F.length("token") <= UNI_MAX_WORD_LEN)
@@ -2577,7 +2573,7 @@ def naive_bayes_source_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     broken by source name — is identical cross-engine."""
     from capstone_etl_spark.operators.sampling import split_column
 
-    docs = _docs(spark, sf_dir).withColumn(
+    docs = load_table(spark, sf_dir, "documents").withColumn(
         "_is_train", split_column(F.col("doc_id")) == "train"
     )
     tok = docs.select(
@@ -2764,7 +2760,7 @@ def lm_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain is DECODE_STEPS joins each with a 1-row probe side against
     the cached argmax relation — constant-depth, nothing per-step
     scales with the corpus."""
-    toks = _docs(spark, sf_dir).select(tokenize("text").alias("t")).transform(cached)
+    toks = load_table(spark, sf_dir, "documents").select(tokenize("text").alias("t")).transform(cached)
     bigr = toks.select(
         F.explode(
             F.expr(
@@ -2865,7 +2861,7 @@ def ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (absent lengths contribute 0 — no fill-forward needed). Exactness:
     D is maximized as the INTEGER |cum_s·m − cum_rest·n| (products
     ≤ N², inside int64 up to ~3e9 docs), divided once at the end."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     sl = docs.groupBy("source", F.col("n_chars").alias("len")).agg(
         F.count("*").alias("cs")
     )

@@ -287,7 +287,7 @@ _NOISE_VERDICT_SQL = f"""
 
 
 def _noise_votes(withv: DataFrame, voters: DataFrame | None = None) -> DataFrame:
-    """(vec_a, n_votes, n_agree) — the within-cell K-NN label vote over
+    """(vec_id, n_votes, n_agree) — the within-cell K-NN label vote over
     an assigned relation (vec_id, vq, cell, label). `voters` (default:
     withv itself) is the relation the votes come FROM — the
     incremental form passes the base corpus here so delta arrivals are
@@ -308,8 +308,7 @@ def _noise_votes(withv: DataFrame, voters: DataFrame | None = None) -> DataFrame
         F.col("vec_id").alias("vec_b"), "cell",
         F.col("vq").alias("qb"), F.col("label").alias("lb"),
     )
-    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
-    return (
+    return noise_tally(
         a.join(b, "cell")
         .filter(F.col("vec_a") != F.col("vec_b"))
         .select(
@@ -317,13 +316,39 @@ def _noise_votes(withv: DataFrame, voters: DataFrame | None = None) -> DataFrame
             _d2_fold("qa", F.col("qb")).alias("d2p"),
             (F.col("la") == F.col("lb")).cast("int").alias("match"),
         )
-        .withColumn("rnk", F.row_number().over(wv))
+    )
+
+
+def noise_tally(cands: DataFrame) -> DataFrame:
+    """(vec_id, n_votes, n_agree) — the K-NN vote over a (vec_a, vec_b,
+    d2p, match) candidate relation: each vec_a's NOISE_K nearest
+    voters by (d2p, vec_b), counted and agreement-summed. Shared by
+    the batch vote chain and the streaming twin's drained candidates."""
+    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
+    return (
+        cands.withColumn("rnk", F.row_number().over(wv))
         .filter(F.col("rnk") <= NOISE_K)
-        .groupBy("vec_a")
+        .groupBy(F.col("vec_a").alias("vec_id"))
         .agg(
             F.count("*").alias("n_votes"),
             F.sum("match").alias("n_agree"),
         )
+    )
+
+
+def noise_release(rows: DataFrame, votes: DataFrame) -> DataFrame:
+    """(vec_id, label, cell, n_votes, n_agree, agree_ratio, suspect) —
+    the label_noise family's verdict: the screened (vec_id, label,
+    cell) rows left-joined to their noise_tally votes, the exact
+    _noise_verdict_cols, and `suspect` when at least NOISE_MIN_VOTES
+    voters disagree by majority."""
+    out = rows.join(votes, "vec_id", "left").select(
+        "vec_id", "label", "cell", *_noise_verdict_cols()
+    )
+    return out.withColumn(
+        "suspect",
+        (F.col("n_votes") >= NOISE_MIN_VOTES)
+        & (F.col("n_agree") * 2 < F.col("n_votes")),
     )
 
 
@@ -363,17 +388,7 @@ def label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Singleton-cell vectors emit n_votes = 0, NULL ratio, suspect =
     false — the consumer can route them to a wider probe."""
     withv = _noise_assigned(spark, sf_dir)
-    votes = _noise_votes(withv)
-    out = (
-        withv.select("vec_id", "label", "cell")
-        .join(votes.withColumnRenamed("vec_a", "vec_id"), "vec_id", "left")
-        .select("vec_id", "label", "cell", *_noise_verdict_cols())
-    )
-    return out.withColumn(
-        "suspect",
-        (F.col("n_votes") >= NOISE_MIN_VOTES)
-        & (F.col("n_agree") * 2 < F.col("n_votes")),
-    )
+    return noise_release(withv.select("vec_id", "label", "cell"), _noise_votes(withv))
 
 
 # The shared within-cell vote chain over the hier `assign` relation —
@@ -434,7 +449,7 @@ def label_noise_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes = _noise_votes(withv)
     return (
         withv.select("vec_id")
-        .join(votes.withColumnRenamed("vec_a", "vec_id"), "vec_id", "left")
+        .join(votes, "vec_id", "left")
         .select(
             "vec_id",
             F.coalesce(F.col("n_votes"), F.lit(0)).cast("long").alias("n_votes"),
@@ -493,17 +508,7 @@ def label_noise_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     withv = assign.join(emb.select("vec_id", "label"), "vec_id").transform(cached)
     delta_v = withv.filter(_is_delta(F.col("vec_id")))
     base_v = withv.filter(~_is_delta(F.col("vec_id")))
-    votes = _noise_votes(delta_v, base_v).withColumnRenamed("vec_a", "vec_id")
-    out = (
-        delta_v.select("vec_id", "label", "cell")
-        .join(votes, "vec_id", "left")
-        .select("vec_id", "label", "cell", *_noise_verdict_cols())
-    )
-    return out.withColumn(
-        "suspect",
-        (F.col("n_votes") >= NOISE_MIN_VOTES)
-        & (F.col("n_agree") * 2 < F.col("n_votes")),
-    )
+    return noise_release(delta_v.select("vec_id", "label", "cell"), _noise_votes(delta_v, base_v))
 
 
 def _hier_assign_base_sql() -> str:
@@ -742,22 +747,32 @@ def coreset_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("d", "center_id")).alias("m"))
         .select("vec_id", F.col("m.center_id").alias("center_id"), F.col("m.d").alias("d"))
     )
-    total = emb.agg(F.count("*").alias("total"))
-    return (
-        assigned.groupBy("center_id")
-        .agg(
-            F.count("*").cast("long").alias("pop"),
-            F.sum(F.col("d").cast("decimal(20,12)")).alias("sum_d"),
-            F.max("d").alias("max_d"),
-        )
-        .join(F.broadcast(total), F.lit(True))
-        .select(
-            "center_id",
-            "pop",
-            (F.col("pop") / F.col("total")).alias("share"),
-            (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
-            "max_d",
-        )
+    return coverage_release(
+        coverage_cells(assigned), emb.agg(F.count("*").alias("total"))
+    )
+
+
+def coverage_cells(assigned: DataFrame) -> DataFrame:
+    """(center_id, pop, sum_d, max_d) over a (center_id, d) assignment —
+    the per-center aggregate of the coverage audit, batch or streaming;
+    sum_d snaps each distance to DECIMAL(20,12) (exact, order-free)."""
+    return assigned.groupBy("center_id").agg(
+        F.count("*").cast("long").alias("pop"),
+        F.sum(F.col("d").cast("decimal(20,12)")).alias("sum_d"),
+        F.max("d").alias("max_d"),
+    )
+
+
+def coverage_release(cells: DataFrame, total: DataFrame) -> DataFrame:
+    """(center_id, pop, share, mean_d, max_d) — the coverage audit's
+    share / mean projection over coverage_cells and a 1-row (total)
+    corpus count, shared by the batch audit and its streaming twin."""
+    return cells.join(F.broadcast(total), F.lit(True)).select(
+        "center_id",
+        "pop",
+        (F.col("pop") / F.col("total")).alias("share"),
+        (F.col("sum_d").cast("double") / F.col("pop")).alias("mean_d"),
+        "max_d",
     )
 
 
@@ -851,14 +866,7 @@ def embedding_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("vec_a", "vec_id")
     )
     # gate 2: K-NN label vote over the SHARED pair relation
-    wv = Window.partitionBy("vec_a").orderBy(F.asc("d2p"), F.asc("vec_b"))
-    votes = (
-        pairs.withColumn("rnk", F.row_number().over(wv))
-        .filter(F.col("rnk") <= NOISE_K)
-        .groupBy("vec_a")
-        .agg(F.count("*").alias("n_votes"), F.sum("match").alias("n_agree"))
-        .withColumnRenamed("vec_a", "vec_id")
-    )
+    votes = noise_tally(pairs)
     # gate 3: KNN-Shapley value (train split only)
     shap = knn_shapley_values(spark, sf_dir).select("vec_id", "shap_value")
     out = (
@@ -991,6 +999,14 @@ def embedding_shift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(~F.col("is_delta"), dec(F.col("x") * F.col("x"))).otherwise(F.lit(None))
         ).alias("ssq_b"),
     )
+    return shift_release(agg)
+
+
+def shift_release(agg: DataFrame) -> DataFrame:
+    """The drift screen's derived tail over a per-dim (d, n_base,
+    n_delta, sum_b, sum_d, ssq_b) aggregate, shared by
+    embedding_shift_audit and its streaming twin: means, shift, base
+    sd and standardized shift."""
     # every derived column rounds to 6 decimals (token_entropy's
     # per-dim-mean recipe): the exact decimal sums convert to double
     # differently at the last ulp across engines (DuckDB scales the

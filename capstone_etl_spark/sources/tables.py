@@ -159,7 +159,10 @@ def load_table_sqlite(
 # is 100×+, so scan parallelism — not byte count — bounds the map side.
 _FAN_OUT_TABLES = {"documents", "embeddings"}
 # (applicationId, input files) -> scan partition count, so the fan-out
-# guard plans each scan once per session, not once per load_table call
+# guard plans each scan once per session, not once per load_table call.
+# The memo assumes a path's input files do not change within one
+# application: a table rewritten in place under the same path keeps
+# the partition count of its first scan until the application ends.
 _SCAN_PARTS: dict = {}
 
 

@@ -15,8 +15,10 @@ seconds, DECIMAL-exact value sums) so results hash identically.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from capstone_etl_spark.operators.relational import _dsum
 
 WATERMARK = "30 minutes"
 SESSION_GAP = "30 minutes"
@@ -29,10 +31,6 @@ SESSION_GAP = "30 minutes"
 # watermark exceeding the replay disorder — the full data horizon
 # (operators/streaming_queries.py passes one). The late-drop behavior
 # itself is pinned by tests/test_streaming.py::test_watermark_drops_late.
-
-
-def _dsum(col: Column) -> Column:
-    return F.sum(col.cast("decimal(18,2)")).cast("double")
 
 
 def stream_tumbling(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:

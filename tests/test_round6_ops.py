@@ -133,7 +133,6 @@ def test_containment_bounds_and_asymmetry(spark, sf_dir):
         CONTAIN_THRESHOLD,
         dedup_containment,
         jaccard_pairs,
-        _docs,
     )
 
     rows = dedup_containment(spark, sf_dir).collect()

@@ -369,6 +369,35 @@ def test_stream_conversion_survival_equals_batch(spark):
 
 
 
+@pytest.mark.parametrize(
+    "stream_name, batch_path",
+    [
+        ("stream_dedup_incremental", "dedup.dedup_incremental"),
+        ("stream_kll_sketch", "sketches.kll_quantile_sketch"),
+        ("stream_ann_topk", "similarity.ann_ivf_topk"),
+    ],
+)
+def test_stream_twin_equals_batch(spark, stream_name, batch_path):
+    """A stream twin's drained result must equal its batch twin
+    row-for-row: the stream transform rebuilds the batch pre-tail
+    relation and both forms end in the same batch-module tail
+    (admission verdict, KLL release, top-k by sim)."""
+    import importlib
+
+    from capstone_etl_spark.operators import streaming_queries
+    from capstone_etl_spark.session import release_caches
+
+    mod, name = batch_path.split(".")
+    batch = getattr(importlib.import_module(f"capstone_etl_spark.operators.{mod}"), name)
+    stream = getattr(streaming_queries, stream_name)
+    try:
+        got = sorted(map(tuple, stream(spark, SF_DIR).collect()), key=repr)
+        want = sorted(map(tuple, batch(spark, SF_DIR).collect()), key=repr)
+    finally:
+        release_caches()
+    assert got == want and len(got) > 0
+
+
 def test_run_harness_leaves_no_work_dirs(spark, tmp_path, monkeypatch):
     """_run deletes its staging and checkpoint directories when the
     replay succeeds AND when the query's transform raises."""

@@ -5,7 +5,8 @@ when --fork, else one shared session), using the exact bench forcing
 (count + xxhash64 decimal sum over every column), and optionally dumps
 the formatted plan. Separates "cold fresh-session time" from the
 bench's long-session time so session-accumulation effects (JIT/code
-cache, GC pressure) can be told apart from genuine plan cost.
+cache, GC pressure) can be told apart from genuine plan cost. The
+forcing, the warm-up and the deterministic counters are bench.py's.
 
     python tools/profile_queries.py q1 q2 ...          # shared session
     python tools/profile_queries.py --fork q1 q2 ...   # fresh JVM each
@@ -22,63 +23,20 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _exec_totals(spark) -> dict:
-    """Deterministic execution counters from the AppStatusStore: jobs,
-    stages, tasks, shuffle bytes. Host-noise-free evidence for plan /
-    job-structure changes (wall-clock on a noisy host is not).
-
-    Shuffle bytes come from stageList (py4j quirk: it takes a
-    java.util.List of StageStatus values to filter on; an empty list
-    means no filter). Summed over completed stages — deterministic for
-    a deterministic plan, unlike wall-clock."""
-    store = spark._jsc.sc().statusStore()
-    jobs = store.jobsList(None)
-    n_jobs = jobs.size()
-    n_stages = n_tasks = 0
-    it = jobs.iterator()
-    while it.hasNext():
-        j = it.next()
-        n_stages += j.numCompletedStages()
-        n_tasks += j.numCompletedTasks()
-    shuf_r = shuf_w = 0
-    try:
-        # executor totals are cumulative and cheap (one object per
-        # executor — the lone 'driver' in local mode), unlike a
-        # per-stage iteration which costs a py4j round trip per stage
-        eit = store.executorList(False).iterator()
-        while eit.hasNext():
-            e = eit.next()
-            shuf_r += e.totalShuffleRead()
-            shuf_w += e.totalShuffleWrite()
-    except Exception:
-        pass  # counters stay partial if the py4j surface drifts
-    return {
-        "jobs": n_jobs,
-        "stages": n_stages,
-        "tasks": n_tasks,
-        "shuffle_read": shuf_r,
-        "shuffle_write": shuf_w,
-    }
+from bench import _exec_totals, force, warm_jvm  # noqa: E402
 
 
 def _time_one(spark, qs, name: str, sf_dir: str, plan: bool, metrics: dict | None = None):
     from capstone_etl_spark.session import release_caches
-    from pyspark.sql import functions as F
 
     before = _exec_totals(spark) if metrics is not None else None
     t0 = time.perf_counter()
-    df = qs[name](spark, sf_dir)
-    df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()
+    force(qs[name](spark, sf_dir))
     sec = round(time.perf_counter() - t0, 3)
     if metrics is not None:
         after = _exec_totals(spark)
-        metrics[name] = {k: after[k] - before[k] for k in after}
+        if before is not None and after is not None:
+            metrics[name] = {k: after[k] - before[k] for k in after}
     if plan:
         # plans go to STDERR (ADVICE r11): stdout is reserved for the
         # single JSON result line the fork-mode parent parses
@@ -123,13 +81,7 @@ def main() -> None:
     spark = get_spark("profile")
     qs = entrymod.queries()
     # same warmup as bench.py so first-query codegen is not charged
-    from pyspark.sql import functions as F
-
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    w = spark.range(100_000).select(
-        (F.col("id") % 97).alias("k"), F.md5(F.col("id").cast("string")).alias("s")
-    )
-    w.groupBy("k").agg(F.count("*"), F.sum(F.xxhash64("s").cast("decimal(38,0)"))).collect()
+    warm_jvm(spark, sf_dir)
 
     out = {}
     mx: dict = {}

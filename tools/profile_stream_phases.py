@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from profile_queries import _exec_totals  # noqa: E402
+from bench import _exec_totals, warm_jvm  # noqa: E402
 
 
 def main() -> None:
@@ -33,11 +33,7 @@ def main() -> None:
     from capstone_etl_spark.streaming import events_stream, run_to_memory, stage_events
 
     spark = get_spark("stream-phase-profile")
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    w = spark.range(100_000).select(
-        (F.col("id") % 97).alias("k"), F.md5(F.col("id").cast("string")).alias("s")
-    )
-    w.groupBy("k").agg(F.count("*"), F.sum(F.xxhash64("s").cast("decimal(38,0)"))).collect()
+    warm_jvm(spark, sf_dir)
 
     for rep in range(reps):
         work = tempfile.mkdtemp(prefix="stream_phase_")

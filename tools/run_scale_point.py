@@ -18,21 +18,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from pyspark.sql import functions as F
-
+from bench import force, warm_jvm
 from capstone_etl_spark.session import get_spark, release_caches
-
-
-def force(df) -> int:
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).cast(
-                "decimal(38,0)"
-            )
-        ).alias("h"),
-    ).collect()[0]
-    return row.n
 
 
 def main() -> None:
@@ -43,7 +30,7 @@ def main() -> None:
     unknown = [n for n in names if n not in qs]
     assert not unknown, f"unknown queries: {unknown}"
 
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    warm_jvm(spark, sf_dir)
     force(qs[names[0]](spark, sf_dir))
     release_caches()
 
